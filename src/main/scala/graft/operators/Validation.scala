@@ -9,9 +9,15 @@ import org.apache.spark.sql.types._
   * cached scan — unlike the reference, which re-executes the CSV scan for
   * every rule and count (reference: src/utils/validation.py:63-87 chains
   * five filter+write+count rounds, each recomputing lineage; SURVEY.md §4).
+  * `base` is that cached scan (None when uncached); [[unpersist]]
+  * releases it — the derived frames are never cached themselves, and a
+  * base left registered in the cache manager would answer the next
+  * validation of an equal plan (same raw path) with the earlier drop's
+  * rows.
   */
-final case class ValidationResult(valid: DataFrame, rejected: DataFrame) {
-  def unpersist(): Unit = { valid.unpersist(); rejected.unpersist() }
+final case class ValidationResult(valid: DataFrame, rejected: DataFrame,
+                                  base: Option[DataFrame] = None) {
+  def unpersist(): Unit = base.foreach(_.unpersist())
 }
 
 /** The reference's signature composite operator (SURVEY.md §2.12),
@@ -131,7 +137,8 @@ object Validation {
     val carried = tsPresent.map(tsInvalidFlag)
     ValidationResult(
       valid = t.filter(col(ReasonCol).isNull).drop(ReasonCol +: carried: _*),
-      rejected = t.filter(col(ReasonCol).isNotNull).drop(carried: _*))
+      rejected = t.filter(col(ReasonCol).isNotNull).drop(carried: _*),
+      base = if (cache) Some(t) else None)
   }
 
   /** K3 — rejected-record side output (reference: validation.py:26 et al,

@@ -37,9 +37,11 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType,
   * Scale notes (100 TB): commit metadata is driver-side and O(touched
   * files) per commit (checkpoints O(live files), amortized across the
   * interval — the same shape as Delta's JSON actions + parquet
-  * checkpoints), while data moves stay distributed. `upsert` reads and rewrites only
+  * checkpoints), while data moves stay distributed. `upsert` reads only
   * the partitions the batch touches (metadata-level partition pruning:
-  * untouched partitions carry over by reference, zero I/O). Reads list
+  * untouched partitions carry over by reference, zero I/O) and rewrites
+  * them only when the batch is about as large as they are — a smaller
+  * batch hides the rows it replaces with deletion vectors. Reads list
   * no directories at all (no eventually-consistent listing, no
   * small-file LIST storms): the file set comes straight from the
   * manifest, partition values are parsed from the Hive paths under
@@ -155,18 +157,13 @@ final class SnapshotTable(
     * out fully, a 2 MB commit probe runs as one task on any cluster.
     * Scoped and restored around the eager body only — declared-query
     * scans (where per-row compute may be heavy) keep the session
-    * default. */
-  private def withSizeDerivedSplits[A](body: => A): A = {
-    if (sys.env.contains("GRAFT_NO_SIZED_SPLITS")) return body
-    val k = "spark.sql.files.minPartitionNum"
-    val prev = spark.conf.getOption(k)
-    spark.conf.set(k, "1")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(k, v)
-      case None => spark.conf.unset(k)
-    }
-  }
+    * default. Reentrant and thread-safe per session (see
+    * [[SnapshotTable.sizeDerivedSplits]]): the merge sink nests an
+    * upsert inside its own scope, and a stream thread's commit may
+    * overlap a user thread's DML on the same session. */
+  private def withSizeDerivedSplits[A](body: => A): A =
+    if (sys.env.contains("GRAFT_NO_SIZED_SPLITS")) body
+    else SnapshotTable.sizeDerivedSplits(spark)(body)
 
   // ---- commit-log format (Delta-log pattern, two record kinds):
   //  * `v<n>.delta` — the version's ATOMIC commit point: full header
@@ -1293,13 +1290,22 @@ final class SnapshotTable(
   }
 
   /** MERGE-mode streaming epoch: the staged batch upserts by this
-    * handle's primaryKey — touched partitions rewritten, untouched
-    * carried by reference — in ONE commit that also logs the epoch
+    * handle's primaryKey in ONE commit that also logs the epoch
     * high-water mark, with the same replay detection as the append
-    * sink. The staged parquet is read back (schema from the write, dirs
-    * as partition values) and fed through [[upsert]]'s own path, so
-    * merge semantics cannot diverge between the batch API and the
-    * streaming sink. */
+    * sink, and the same plan rule as [[upsert]] ([[mergeOnRead]]):
+    *  - MERGE-ON-READ (a partitioned table whose touched partitions
+    *    hold more live rows than the staged batch — counted from the
+    *    staged files' footers; the touched set is the staged partition
+    *    dirs): the staged files are PROMOTED as they are, like the
+    *    append sink's (re-written with field ids on id-mapped tables),
+    *    and the rows they replace are hidden by deletion vectors — the
+    *    batch is never read back or rewritten;
+    *  - otherwise the staged parquet is read back (schema from the
+    *    write, dirs as partition values) and fed through [[upsert]]'s
+    *    own path.
+    * Either way merge semantics cannot diverge between the batch API
+    * and the streaming sink: same scope, same PK→partition contract,
+    * and the staged writer already enforced the CHECK constraints. */
   private[graft] def commitStagedStreamUpsert(commitId: String,
                                               schema: StructType,
                                               streamKey: String,
@@ -1312,24 +1318,26 @@ final class SnapshotTable(
         .exists(_.toLong >= epochId)
     if (epochDone) { abortStaged(commitId); return false }
     val stage = s"$path/_stage/$commitId"
-    val batch =
-      if (stagedFiles.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else {
-        // read back EXACTLY the attempt's reported files (a crashed
-        // prior attempt of this epoch may have left others beside them)
-        val paths = stagedFiles.toSeq.sorted.map(rel => s"$stage/$rel")
-        // the full (relaxed) schema types BOTH the data files and the
-        // partition-dir values — nothing is inferred from I/O
-        val raw = spark.read.option("basePath", stage)
-          .schema(StructType(schema.fields.map(_.copy(nullable = true))))
-          .parquet(paths: _*)
-        raw.select(schema.fields.toIndexedSeq.map(f =>
-          col(f.name).cast(f.dataType).as(f.name)): _*)
-      }
     pendingProps(streamKey) = epochId.toString
     try {
+      if (!evolve && stagedMergeOnRead(commitId, schema, stagedFiles))
+        return true
+      val batch =
+        if (stagedFiles.isEmpty)
+          spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        else {
+          // read back EXACTLY the attempt's reported files (a crashed
+          // prior attempt of this epoch may have left others beside them)
+          val paths = stagedFiles.toSeq.sorted.map(rel => s"$stage/$rel")
+          // the full (relaxed) schema types BOTH the data files and the
+          // partition-dir values — nothing is inferred from I/O
+          val raw = spark.read.option("basePath", stage)
+            .schema(StructType(schema.fields.map(_.copy(nullable = true))))
+            .parquet(paths: _*)
+          raw.select(schema.fields.toIndexedSeq.map(f =>
+            col(f.name).cast(f.dataType).as(f.name)): _*)
+        }
       if (batch.isEmpty) {
         // still advance the mark: a replayed empty epoch must not wait
         // for a later batch to record progress
@@ -1343,6 +1351,39 @@ final class SnapshotTable(
       } else upsert(batch, evolveSchema = evolve)
       true
     } finally fs.delete(new Path(stage), true)
+  }
+
+  /** The merge sink's merge-on-read side: commit the staged epoch by
+    * promotion plus deletion vectors when [[mergeOnRead]] picks it,
+    * returning whether it did. Decided from metadata alone — staged
+    * footers for the batch count, staged partition dirs for the
+    * touched set — on a partitioned head whose files all share the
+    * current spec (a legacy vintage needs the batch rendered under its
+    * own spec, which only the read-back path does). */
+  private def stagedMergeOnRead(commitId: String, schema: StructType,
+                                stagedFiles: Set[String]): Boolean = {
+    val pcs = tablePartitionCols
+    val v = currentVersion.getOrElse(return false)
+    val m = readManifest(v)
+    if (pcs.isEmpty || stagedFiles.isEmpty ||
+        !m.entries.forall(e => SnapshotTable.specOf(e.path) == pcs))
+      return false
+    val touched = stagedFiles.map(partOf)
+    val scope: FileEntry => Boolean = e => touched(partOf(e.path))
+    val (touchedFiles, keptFiles) = m.entries.partition(scope)
+    val staged = stagedParquet(commitId, Some(stagedFiles))
+    val batchRows = inParallel(staged)(p =>
+      footerProbe(new Path(p), Nil)._1).sum
+    if (!mergeOnRead(touchedFiles, Some(batchRows))) return false
+    val fresh =
+      if (headIdMapped) rewriteStagedWithIds(commitId, schema, Some(stagedFiles))
+      else promoteStage(commitId,
+        Some(StructType(schema.fields.map(_.copy(nullable = true)))),
+        only = Some(stagedFiles))
+    val tableSchema = m.schema.getOrElse(schema)
+    commitMergeOnRead(v, m, touchedFiles, keptFiles, fresh,
+      readFilesRaw(fresh, Some(tableSchema)), tableSchema, scope)
+    true
   }
 
   /** The task-COMMITTED parquet files of a staging tree (same rules as
@@ -2339,11 +2380,21 @@ final class SnapshotTable(
     }: _*)
   }
 
-  /** MERGE-by-PK upsert as ONE atomic commit: touched partitions are
-    * merged and rewritten as new files; untouched partitions carry over
-    * BY REFERENCE (their existing files are listed unchanged in the new
-    * manifest — zero data I/O). Readers see the old snapshot until the
-    * manifest rename, then the new one, never a mix.
+  /** MERGE-by-PK upsert as ONE atomic commit. Untouched partitions
+    * (cluster ranges, on clustered layouts) carry over BY REFERENCE
+    * (their existing files are listed unchanged in the new manifest —
+    * zero data I/O). The touched files take one of two physical plans,
+    * picked per commit from metadata the merge already has (see
+    * [[mergeOnRead]]):
+    *  - COPY-ON-WRITE: touched files are merged and rewritten as new
+    *    files — when the batch is about as large as what it touches;
+    *  - MERGE-ON-READ: only the batch is written; the rows it replaces
+    *    are hidden by deletion vectors on the touched files (the
+    *    [[deleteMoR]] representation) — when the touched files hold
+    *    more live rows than the batch, so a small batch never pays a
+    *    rewrite of the slice it lands in.
+    * Both plans commit the same rows; readers see the old snapshot
+    * until the manifest rename, then the new one, never a mix.
     *
     * @param evolveSchema allow the source to carry NEW columns: kept
     *   rows read them as null (mergeSchema), mirroring
@@ -2362,7 +2413,9 @@ final class SnapshotTable(
     * groups + drop emptied groups, atomically), and deletes
     * participate in the merge SCOPE, so touched-partition / cluster
     * pruning and the optimistic re-base treat them like any other
-    * keyed write. A delete for an absent PK is a no-op. */
+    * keyed write, and they count toward the batch size of
+    * [[upsert]]'s plan rule (a merge-on-read delete hides its match
+    * with a deletion vector). A delete for an absent PK is a no-op. */
   def upsertDelete(source: DataFrame, deleteFlag: String): Unit = {
     require(source.columns.contains(deleteFlag),
       s"upsertDelete: source has no column '$deleteFlag'")
@@ -2410,12 +2463,15 @@ final class SnapshotTable(
     if (evolveSchema && !fs.exists(evolvedMarker))
       fs.create(evolvedMarker, true).close()
     val live = m.entries
-    var committedSchema: StructType = null
     // the merge SCOPE: does a file (in particular one a concurrent
     // commit added) overlap the slice this merge read and rewrote?
     // Decides whether a lost commit race may re-base (see commitMerge).
     var overlapsScope: FileEntry => Boolean = _ => true
-    val (keptFiles, newFiles) = tablePartitionCols match {
+    // (touched, kept-by-reference, batch row count when the scope
+    // aggregate counted it, partition dirs the batch renders into)
+    val (touchedFiles, keptFiles, batchRows, batchDirs)
+        : (Seq[FileEntry], Seq[FileEntry], Option[Long], Option[Int]) =
+      tablePartitionCols match {
       case Seq() =>
         // Stats-scoped merge for CLUSTERED unpartitioned layouts (the
         // Iceberg-hidden-partitioning / Delta-liquid-clustering shape:
@@ -2449,52 +2505,41 @@ final class SnapshotTable(
             "cluster value would break the PK→cluster stability that " +
             "stats-scoped merging relies on; include the column " +
             "explicitly (nulls in the batch disable pruning safely)")
-        val (touchedFiles, keptFiles) =
-          if (statted.isEmpty || live.isEmpty) (live, Seq.empty[FileEntry])
+        val none = Seq.empty[FileEntry]
+        if (statted.isEmpty || live.isEmpty) (live, none, None, None)
+        else {
+          val probe = timed("cluster-bounds")(knock.agg(
+            count(lit(1)),
+            statted.flatMap(c => Seq(
+              min(col(c)), max(col(c)),
+              sum(when(col(c).isNull, 1L).otherwise(0L)))): _*).head())
+          val n = Some(probe.getLong(0))
+          if (probe.getLong(0) == 0L) (none, live, n, None)
           else {
-            val probe = timed("cluster-bounds")(knock.agg(
-              count(lit(1)),
-              statted.flatMap(c => Seq(
-                min(col(c)), max(col(c)),
-                sum(when(col(c).isNull, 1L).otherwise(0L)))): _*).head())
-            if (probe.getLong(0) == 0L) (Seq.empty[FileEntry], live)
+            val hasNull = statted.indices.exists(i =>
+              probe.getLong(3 + i * 3) > 0L)
+            if (hasNull) (live, none, n, None)
             else {
-              val hasNull = statted.indices.exists(i =>
-                probe.getLong(3 + i * 3) > 0L)
-              if (hasNull) (live, Seq.empty[FileEntry])
+              // only bounds the stats encoding supports may prune
+              // (integral/float/string/date/timestamp/decimal); a
+              // cluster column of an un-encodable type (binary…)
+              // simply contributes no pruning — never an upsert
+              // failure
+              val bounds = statted.zipWithIndex.flatMap { case (c, i) =>
+                val (lo, hi) = (probe.get(1 + i * 3), probe.get(2 + i * 3))
+                try { FileEntry.enc(lo); FileEntry.enc(hi); Some((c, lo, hi)) }
+                catch { case _: IllegalArgumentException => None }
+              }
+              if (bounds.isEmpty) (live, none, n, None)
               else {
-                // only bounds the stats encoding supports may prune
-                // (integral/float/string/date/timestamp/decimal); a
-                // cluster column of an un-encodable type (binary…)
-                // simply contributes no pruning — never an upsert
-                // failure
-                val bounds = statted.zipWithIndex.flatMap { case (c, i) =>
-                  val (lo, hi) = (probe.get(1 + i * 3), probe.get(2 + i * 3))
-                  try { FileEntry.enc(lo); FileEntry.enc(hi); Some((c, lo, hi)) }
-                  catch { case _: IllegalArgumentException => None }
-                }
-                if (bounds.isEmpty) (live, Seq.empty[FileEntry])
-                else {
-                  overlapsScope =
-                    e => candidatesOf(Seq(e), bounds).nonEmpty
-                  live.partition(overlapsScope)
-                }
+                overlapsScope =
+                  e => candidatesOf(Seq(e), bounds).nonEmpty
+                val (t, k) = live.partition(overlapsScope)
+                (t, k, n, None)
               }
             }
           }
-        val merged = stampFieldIds(
-          if (touchedFiles.isEmpty)
-            alignUntouched(src, m.schema, evolveSchema)
-          else {
-            val cur = readFiles(touchedFiles, m.schema)
-            val kept = cur
-              .join(knock.select(primaryKey), Seq(primaryKey), "left_anti")
-            if (evolveSchema) kept.unionByName(src, allowMissingColumns = true)
-            else kept.unionByName(
-              src.select(cur.columns.toIndexedSeq.map(col): _*))
-          })
-        committedSchema = withLoggedMetadata(merged.schema, m.schema)
-        (keptFiles, writeDataFiles(merged))
+        }
       case pcs =>
         // render the partition values exactly the way the writer names
         // dirs: CAST to string (matches Spark's path rendering for
@@ -2512,18 +2557,23 @@ final class SnapshotTable(
         // exchange's empty tasks were pure scheduling overhead on
         // every merge). Driver memory bound is unchanged: the same
         // O(distinct dirs) rows crossed under distinct().collect().
-        def renderedSet(spec: Seq[String]): Set[String] =
-          timed("touched-collect")(
-            knock.agg(collect_set(
-              struct(spec.map(c => col(c).cast("string")): _*)))
-            .head().getSeq[org.apache.spark.sql.Row](0)
+        // The current spec's aggregate also counts the batch (the plan
+        // rule's input) in the same job.
+        def rendered(spec: Seq[String], extra: Column*): org.apache.spark.sql.Row =
+          timed("touched-collect")(knock.agg(collect_set(
+            struct(spec.map(c => col(c).cast("string")): _*)), extra: _*)
+            .head())
+        def renderedSet(r: org.apache.spark.sql.Row,
+                        spec: Seq[String]): Set[String] =
+          r.getSeq[org.apache.spark.sql.Row](0)
             .map(r => spec.indices.map(i =>
               org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
                 .getPartitionValueString(
                   if (r.isNullAt(i)) null else r.getString(i)))
               .mkString("/"))
-            .toSet)
-        val touched = renderedSet(pcs)
+            .toSet
+        val current = rendered(pcs, count(lit(1)))
+        val touched = renderedSet(current, pcs)
         // LEGACY-spec vintages (partition-spec evolution): each is
         // merge-scoped by rendering the batch under ITS OWN spec — a
         // replaced PK may live in an old-layout file, and matching it
@@ -2537,7 +2587,7 @@ final class SnapshotTable(
             .filter(_ != pcs).toSeq.distinct.map { spec =>
               spec -> (if (spec.nonEmpty &&
                            spec.forall(c => knockCols(c.toLowerCase)))
-                         Some(renderedSet(spec))
+                         Some(renderedSet(rendered(spec), spec))
                        else None)
             }.toMap
         overlapsScope = e => {
@@ -2549,33 +2599,85 @@ final class SnapshotTable(
           }
         }
         val (touchedFiles, keptFiles) = live.partition(overlapsScope)
-        val current =
-          if (touchedFiles.isEmpty) spark.emptyDataFrame // all-new partitions
-          else timed("open-touched")(readFiles(touchedFiles, m.schema))
-        val merged = stampFieldIds(
-          if (touchedFiles.isEmpty)
-            alignUntouched(src, m.schema, evolveSchema)
-          else {
-            val kept = current
-              .join(knock.select(primaryKey), Seq(primaryKey), "left_anti")
-            if (evolveSchema) kept.unionByName(src, allowMissingColumns = true)
-            else kept.unionByName(
-              src.select(current.columns.toIndexedSeq.map(col): _*))
-          })
-        committedSchema = withLoggedMetadata(merged.schema, m.schema)
-        // merged rows live only in the `touched` dirs — src renders
-        // into them by construction and current-spec kept rows came
-        // from files inside them — so `touched.size` is the exact
-        // output-dir count. A LEGACY-spec touched file (partition-spec
-        // evolution) breaks that: its kept rows carry arbitrary
-        // current-spec values, so the hint is withheld there.
-        val mergeDirHint =
-          if (touchedFiles.forall(e => SnapshotTable.specOf(e.path) == pcs))
-            Some(touched.size)
-          else None
-        (keptFiles, writeDataFiles(merged, dirHint = mergeDirHint))
+        (touchedFiles, keptFiles, Some(current.getLong(1)), Some(touched.size))
     }
-    commitMerge(v, m, keptFiles, newFiles, committedSchema, overlapsScope)
+    if (mergeOnRead(touchedFiles, batchRows)) {
+      // write the batch alone — its rows render into exactly the
+      // `batchDirs` dirs — and hide what it replaces
+      val written = stampFieldIds(alignUntouched(src, m.schema, evolveSchema))
+      val schema = withLoggedMetadata(written.schema, m.schema)
+      val fresh = writeDataFiles(written, dirHint = batchDirs)
+      // a plain upsert knocks out exactly the keys it just wrote: the
+      // probe reads them back from the new files (a scan of the batch's
+      // few small files) instead of evaluating the source lineage a
+      // further time; upsertDelete's deletes are not written, so it
+      // probes with its source
+      val keys = if (deleteFlag.isEmpty) readFilesRaw(fresh, Some(schema))
+                 else knock
+      commitMergeOnRead(v, m, touchedFiles, keptFiles, fresh, keys, schema,
+        overlapsScope)
+    } else {
+      val merged = stampFieldIds(
+        if (touchedFiles.isEmpty)
+          alignUntouched(src, m.schema, evolveSchema) // all-new slice
+        else {
+          val cur = timed("open-touched")(readFiles(touchedFiles, m.schema))
+          val kept = cur
+            .join(knock.select(primaryKey), Seq(primaryKey), "left_anti")
+          if (evolveSchema) kept.unionByName(src, allowMissingColumns = true)
+          else kept.unionByName(
+            src.select(cur.columns.toIndexedSeq.map(col): _*))
+        })
+      // merged rows live only in the batch's dirs — src renders into
+      // them by construction and current-spec kept rows came from
+      // files inside them. A LEGACY-spec touched file (partition-spec
+      // evolution) breaks that: its kept rows carry arbitrary
+      // current-spec values, so the hint is withheld there.
+      val dirHint = batchDirs.filter(_ => touchedFiles.forall(e =>
+        SnapshotTable.specOf(e.path) == tablePartitionCols))
+      commitMerge(v, m, keptFiles, writeDataFiles(merged, dirHint = dirHint),
+        withLoggedMetadata(merged.schema, m.schema), overlapsScope)
+    }
+  }
+
+  /** THE plan rule of a keyed merge: merge-on-read iff the touched
+    * files' LIVE rows (manifest `rows − deletedRowCount`, the exact
+    * files the merge scope selected) exceed the batch's row count —
+    * then hiding the replaced rows and writing only the batch moves
+    * fewer bytes than rewriting the slice. Otherwise (a batch about as
+    * large as what it touches, an all-new slice, no batch count from
+    * the scope aggregate, or a file with no recorded row count) the
+    * merge rewrites copy-on-write, exactly as before the rule existed.
+    * Metadata only: no job, no option. */
+  private def mergeOnRead(touched: Seq[FileEntry],
+                          batchRows: Option[Long]): Boolean =
+    touched.nonEmpty && touched.forall(_.rows >= 0L) && batchRows.exists(
+      _ < touched.iterator.map(e => e.rows - e.deletedRowCount).sum)
+
+  /** Commit the merge-on-read side of a merge: `fresh` (the written
+    * batch), `kept` by reference, and `touched` with every row whose
+    * primary key `knock` carries hidden. ONE probe job reads only the
+    * key and row position of `touched`, semi-joins the knock-out keys
+    * and builds each matched file's deletion bitmap
+    * ([[SnapshotTable.deleteBitmapsOf]], the builder [[deleteMoR]]
+    * uses); matched files commit with their old and new vectors
+    * unioned (a position already hidden may match again — the union
+    * absorbs it), unmatched ones by reference. A NULL key never
+    * matches, as the copy-on-write anti-join keeps null-keyed rows. */
+  private def commitMergeOnRead(v: Long, m: Manifest, touched: Seq[FileEntry],
+                                kept: Seq[FileEntry], fresh: Seq[FileEntry],
+                                knock: DataFrame, schema: StructType,
+                                scope: FileEntry => Boolean): Unit = {
+    val pairs = readFilesRaw(touched, m.schema, withPos = true)
+      .select(col(primaryKey),
+        substring_index(col(SnapshotTable.PosFileCol), "/", -1).as("f"),
+        col(SnapshotTable.PosIdxCol).as("p"))
+      .join(knock.select(primaryKey), Seq(primaryKey), "left_semi")
+    val byBase = timed("mor-probe")(SnapshotTable.deleteBitmapsOf(pairs))
+    val (hit, clean) = touched.partition(e =>
+      byBase.contains(e.path.substring(e.path.lastIndexOf('/') + 1)))
+    commitMerge(v, m, kept ++ clean, fresh, schema, scope,
+      vectored = SnapshotTable.withVectors(hit, byBase))
   }
 
   /** Commit a merge-class rewrite (kept-by-reference + freshly-written
@@ -2596,17 +2698,25 @@ final class SnapshotTable(
     *    vector landing on a replaced file, which rides in the entry's
     *    serialized stats);
     *  - ADDED a file overlapping the merge scope (it could hold a PK
-    *    this batch replaces; keeping it would duplicate the key). */
+    *    this batch replaces; keeping it would duplicate the key).
+    *
+    * `vectored` are base files a merge-on-read merge put a deletion
+    * vector on (each entry already carries the union). They count as
+    * REPLACED for conflict detection — a concurrent commit that
+    * removed one, or changed its vector, fails the merge as stale —
+    * and a re-base re-applies them over the head's byte-identical
+    * entries. */
   private def commitMerge(baseV: Long, base: Manifest,
                           keptFiles: Seq[FileEntry],
                           newFiles: Seq[FileEntry],
                           schema: StructType,
-                          overlapsScope: FileEntry => Boolean): Unit = {
+                          overlapsScope: FileEntry => Boolean,
+                          vectored: Seq[FileEntry] = Nil): Unit = {
     val keptPaths = keptFiles.map(_.path).toSet
     val replaced = base.entries.map(_.path).filterNot(keptPaths).toSet
     val baseSer = base.entries.map(e => e.path -> e.serialize).toMap
     var v = baseV
-    var next = keptFiles ++ newFiles
+    var next = keptFiles ++ vectored ++ newFiles
     var attempt = 0
     while (true) {
       try { commitManifest(v + 1, next, schema); return }
@@ -2630,16 +2740,17 @@ final class SnapshotTable(
           val headSer = hm.entries.map(e => e.path -> e.serialize).toMap
           replaced.foreach { p =>
             headSer.get(p) match {
-              case None => stale(s"removed a file this merge rewrote ($p)")
+              case None => stale(s"removed a file this merge replaced ($p)")
               case Some(s) if s != baseSer(p) =>
-                stale(s"modified a file this merge rewrote ($p)")
+                stale(s"modified a file this merge replaced ($p)")
               case _ => ()
             }
           }
           val added = hm.entries.filter(e => !baseSer.contains(e.path))
           added.find(overlapsScope).foreach(a =>
             stale(s"added a file inside this merge's scope (${a.path})"))
-          next = hm.entries.filterNot(e => replaced(e.path)) ++ newFiles
+          next = hm.entries.filterNot(e => replaced(e.path)) ++
+            vectored ++ newFiles
           v = head
       }
     }
@@ -2808,12 +2919,9 @@ final class SnapshotTable(
       bcOld.value.get(base).forall(dv => !dv.contains(idx))
     }
     // matched positions are aggregated into one compressed bitmap PER
-    // FILE on the executors — only (basename, bitmap bytes, count)
-    // crosses to the driver, O(≤2 bytes/deleted row) instead of a Row
-    // per position. That is what lets the cap default to 64M (it is a
-    // plan-quality guard — "a delete this broad should rewrite" — not
-    // a driver-memory ceiling anymore).
-    import spark.implicits._
+    // FILE on the executors ([[SnapshotTable.deleteBitmapsOf]]). That is
+    // what lets the cap default to 64M (it is a plan-quality guard — "a
+    // delete this broad should rewrite" — not a driver-memory ceiling).
     val pairs = readFilesRaw(cands, m.schema, withPos = true)
       .filter(visible(
         col(SnapshotTable.PosFileCol), col(SnapshotTable.PosIdxCol)))
@@ -2843,40 +2951,8 @@ final class SnapshotTable(
         s"deleteMoR matched $matched rows at $path (cap $cap) — a " +
           "delete this broad should rewrite files: use delete() " +
           "(copy-on-write), or raise graft.mor.maxDeleteRows")
-    // shuffle by file, sort by position WITHIN partitions, then build
-    // each file's bitmap STREAMING over its contiguous sorted run — no
-    // task ever materializes a file's full position array (a delete
-    // skewed into one large file previously held up to cap×8 bytes in
-    // a single mapGroups task)
-    val perFile = pairs.as[(String, Long)]
-      .repartition(col("f"))
-      .sortWithinPartitions("f", "p")
-      .mapPartitions { rows =>
-        val buf = rows.buffered
-        new Iterator[(String, String, Long)] {
-          def hasNext: Boolean = buf.hasNext
-          def next(): (String, String, Long) = {
-            SnapshotTable.dvBitmapsBuilt.incrementAndGet()
-            val base = buf.head._1
-            val run = new Iterator[Long] {
-              def hasNext: Boolean = buf.hasNext && buf.head._1 == base
-              def next(): Long = buf.next()._2
-            }
-            val bm = graft.functions.DeleteBitmap.fromAscending(run)
-            (base, FileEntry.encodeDvAscending(bm.iterator), bm.cardinality)
-          }
-        }
-      }
-      .collect()
-    val byBase = perFile.map { case (b, enc, _) =>
-      b -> graft.functions.DeleteBitmap.fromAscending(
-        FileEntry.dvIterator(enc))
-    }.toMap
-    val updated = live.map { e =>
-      val base = e.path.substring(e.path.lastIndexOf('/') + 1)
-      byBase.get(base).fold(e)(bm =>
-        e.withDeletedBitmap(e.deletedBitmap.union(bm)))
-    }
+    val updated = SnapshotTable.withVectors(live,
+      SnapshotTable.deleteBitmapsOf(pairs))
     commitManifest(v + 1, updated,
       m.schema.getOrElse(readFiles(m.entries).schema))
   }
@@ -3073,38 +3149,16 @@ final class SnapshotTable(
   private def evolvedMarker = new Path(s"$path/_evolved")
 
   /** Read a file set with MERGE-ON-READ deletes applied: files carrying
-    * a deletion vector ([[deleteMoR]]) are read through a position
-    * filter — the manifest's sorted row positions checked against the
-    * parquet reader's `_metadata.row_index`, keyed by file basename
-    * (commit-UUID-prefixed, globally unique) — while the (usually much
-    * larger) DV-free subset stays on the plain vectorized scan with no
-    * metadata column and no filter. Every API read routes here, so a
-    * deleted row can never resurface through time travel, CDC, upsert
-    * merges, compaction or the DML probe paths. */
+    * a deletion vector ([[deleteMoR]], a merge-on-read merge) are read
+    * through it inside the parquet reader ([[DvParquetFileFormat]]), so
+    * the plan keeps a clean read's shape. Every API read routes here,
+    * so a deleted row can never resurface through time travel, CDC,
+    * upsert merges, compaction or the DML probe paths. */
   private def readFiles(entries: Seq[FileEntry],
-                        manifestSchema: Option[StructType] = None): DataFrame = {
-    val (dvd, plain) = entries.partition(_.hasDeletes)
-    if (dvd.isEmpty) return readFilesRaw(entries, manifestSchema)
-    // vectors travel as compressed Roaring-style bitmaps
-    // ([[graft.functions.DeleteBitmap]]): ≤ 2 bytes/deleted row in the
-    // broadcast and O(1) membership per row. A UDF (not codegen) is
-    // acceptable here because only the DV'd files pay it.
-    val dvByBase = dvd.map(e =>
-      e.path.substring(e.path.lastIndexOf('/') + 1) -> e.deletedBitmap).toMap
-    val bc = spark.sparkContext.broadcast(dvByBase)
-    val keep = udf { (file: String, idx: Long) =>
-      val base = file.substring(file.lastIndexOf('/') + 1)
-      bc.value.get(base).forall(dv => !dv.contains(idx))
-    }
-    val raw = readFilesRaw(dvd, manifestSchema, withPos = true)
-    val cols = raw.columns.toIndexedSeq
-      .filterNot(c => c == SnapshotTable.PosFileCol || c == SnapshotTable.PosIdxCol)
-    val filtered = raw
-      .filter(keep(col(SnapshotTable.PosFileCol), col(SnapshotTable.PosIdxCol)))
-      .select(cols.map(col): _*)
-    if (plain.isEmpty) filtered
-    else readFilesRaw(plain, manifestSchema).unionByName(filtered)
-  }
+                        manifestSchema: Option[StructType] = None): DataFrame =
+    readFilesRaw(entries, manifestSchema, vectors = entries.filter(_.hasDeletes)
+      .map(e => e.path.substring(e.path.lastIndexOf('/') + 1) -> e.deletedBitmap)
+      .toMap)
 
   /** Read a file set, planning from manifest metadata when possible.
     *
@@ -3119,10 +3173,14 @@ final class SnapshotTable(
     * `withPos = true` appends two provenance columns straight off the
     * scan's `_metadata` struct — [[SnapshotTable.PosFileCol]] (the
     * file path) and [[SnapshotTable.PosIdxCol]] (the row's position in
-    * its file) — the coordinates deletion vectors are expressed in. */
+    * its file) — the coordinates deletion vectors are expressed in.
+    * `vectors` (file basename → deletion bitmap) hides those rows; the
+    * position-reading callers pass none. */
   private def readFilesRaw(entries: Seq[FileEntry],
                            manifestSchema: Option[StructType] = None,
-                           withPos: Boolean = false): DataFrame = {
+                           withPos: Boolean = false,
+                           vectors: Map[String, graft.functions.DeleteBitmap] = Map.empty)
+      : DataFrame = {
     val effective = declaredSchema.orElse(manifestSchema)
     // the provenance projection: (file path, row position) straight off
     // the parquet scan's metadata struct, aliased to reserved names so
@@ -3181,8 +3239,10 @@ final class SnapshotTable(
           val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
             new ManifestFileIndex(spark, dataDir, es, partSchema),
             partSchema, dataSchema, None,
-            new org.apache.spark.sql.execution.datasources.parquet
-              .ParquetFileFormat,
+            if (vectors.isEmpty)
+              new org.apache.spark.sql.execution.datasources.parquet
+                .ParquetFileFormat
+            else new DvParquetFileFormat(vectors),
             Map.empty)(spark)
           // relation schema is dataSchema ++ partitionSchema; restore
           // the declared column order (metadata provenance resolved
@@ -3204,9 +3264,21 @@ final class SnapshotTable(
       .option("mergeSchema", fs.exists(evolvedMarker).toString)
     val frame = effective.fold(r)(s => r.schema(s))
       .parquet(entries.map(e => s"$dataDir/${e.path}"): _*)
-    if (!withPos) frame
-    else frame.select(
-      (frame.columns.toIndexedSeq.map(col) ++ posCols): _*)
+    val cols = frame.columns.toIndexedSeq.map(col)
+    if (vectors.nonEmpty) {
+      // a listed read takes no custom format: filter on the scan's own
+      // row positions instead (≤ 2 bytes per hidden row broadcast)
+      val bc = spark.sparkContext.broadcast(vectors)
+      val keep = udf { (file: String, idx: Long) =>
+        bc.value.get(file.substring(file.lastIndexOf('/') + 1))
+          .forall(dv => !dv.contains(idx))
+      }
+      frame.select(cols ++ posCols: _*)
+        .filter(keep(col(SnapshotTable.PosFileCol), col(SnapshotTable.PosIdxCol)))
+        .select(cols: _*)
+    }
+    else if (!withPos) frame
+    else frame.select(cols ++ posCols: _*)
   }
 
   /** Planning inputs for an external scan of one snapshot (the DSv2
@@ -3315,12 +3387,28 @@ final class SnapshotTable(
       (e.path, e.stats.get(FileEntry.DvKey).map(_._1).getOrElse(""))
     val before = mFrom.entries.map(key).toSet
     val after = mTo.entries.map(key).toSet
-    val newEntries = mTo.entries.filterNot(e => before(key(e)))
+    // a file whose vector only GREW (deleteMoR, a merge-on-read
+    // upsert) changed by exactly its newly-hidden rows: those are read
+    // as before images, position-filtered, instead of the whole file
+    // at both visibilities (which would cancel pairwise in the diff)
+    val fromByPath = mFrom.entries.map(e => e.path -> e).toMap
+    val grown = mTo.entries.flatMap { e =>
+      fromByPath.get(e.path).filter(o => key(o) != key(e)).flatMap { o =>
+        val (was, is) = (o.deletedBitmap, e.deletedBitmap)
+        if (was.union(is) != is) None
+        else Some(o -> graft.functions.DeleteBitmap.fromAscending(
+          is.iterator.filterNot(was.contains)))
+      }
+    }
+    val grownPaths = grown.map(_._1.path).toSet
+    val newEntries = mTo.entries.filterNot(e =>
+      before(key(e)) || grownPaths(e.path))
     // REMOVED files matter independently of added ones: a delete can
     // take a file away without leaving a replacement (delete-all
     // leaves none anywhere) and its rows must surface as before-images
-    val removedEntries = mFrom.entries.filterNot(e => after(key(e)))
-    if (newEntries.isEmpty && removedEntries.isEmpty) {
+    val removedEntries = mFrom.entries.filterNot(e =>
+      after(key(e)) || grownPaths(e.path))
+    if (newEntries.isEmpty && removedEntries.isEmpty && grown.isEmpty) {
       // type the empty frame by toV's OWN schema, not the current
       // head's — the table may have evolved after toV, and an empty
       // span must not change shape depending on later commits
@@ -3342,12 +3430,29 @@ final class SnapshotTable(
     // and costs one shuffle, like EXCEPT did; the signed count's
     // magnitude is the image multiplicity.
     val newRows = readFiles(newEntries, mTo.schema)
-    if (removedEntries.isEmpty) newRows.withColumn(img, lit("after"))
+    if (removedEntries.isEmpty && grown.isEmpty)
+      newRows.withColumn(img, lit("after"))
     else {
       // a span crossing a schema-evolution commit reads old files
       // without the new columns: pad them with nulls so the diff lines
       // up column-for-column
-      val oldRows = readFiles(removedEntries, mFrom.schema)
+      val hidden =
+        if (grown.isEmpty) None
+        else {
+          val bc = spark.sparkContext.broadcast(grown.map { case (o, bm) =>
+            o.path.substring(o.path.lastIndexOf('/') + 1) -> bm }.toMap)
+          val newlyHidden = udf { (file: String, idx: Long) =>
+            bc.value(file.substring(file.lastIndexOf('/') + 1)).contains(idx)
+          }
+          val raw = readFilesRaw(grown.map(_._1), mFrom.schema, withPos = true)
+          Some(raw.filter(newlyHidden(
+              col(SnapshotTable.PosFileCol), col(SnapshotTable.PosIdxCol)))
+            .drop(SnapshotTable.PosFileCol, SnapshotTable.PosIdxCol))
+        }
+      val oldRows = (
+        (if (removedEntries.isEmpty) None
+         else Some(readFiles(removedEntries, mFrom.schema))) ++ hidden)
+        .reduce(_ unionByName _)
       val oldAligned =
         if (oldRows.columns.sameElements(newRows.columns)) oldRows
         else oldRows.unionByName(newRows.limit(0), allowMissingColumns = true)
@@ -3972,6 +4077,93 @@ final class SnapshotTable(
 }
 
 object SnapshotTable {
+  /** Open size-derived-split scopes per session: (depth, the
+    * `minPartitionNum` value the outermost scope found). Guarded by its
+    * own monitor; an entry lives only while a scope is open. */
+  private val splitScopes =
+    mutable.Map.empty[SparkSession, (Int, Option[String])]
+
+  private val MinPartitionNumKey = "spark.sql.files.minPartitionNum"
+
+  /** THE deletion-vector builder, shared by [[SnapshotTable.deleteMoR]]
+    * and the merge-on-read side of a merge: `pairs` holds one
+    * (`f` = file basename, `p` = row position) per row to hide. Each
+    * task sorts its own pairs by (file, position) — a local, spillable
+    * sort, no shuffle and so no extra stage or job — and builds one
+    * compressed bitmap per file run STREAMING over the sorted run (no
+    * task materializes a file's position array); only (basename,
+    * encoded bitmap) crosses to the driver, ≤ 2 bytes per hidden row
+    * instead of a Row per position. A file whose rows spread over
+    * several tasks (splits, a shuffled join) yields one bitmap per
+    * task; the driver unions them. */
+  private[graft] def deleteBitmapsOf(pairs: DataFrame)
+      : Map[String, graft.functions.DeleteBitmap] = {
+    import pairs.sparkSession.implicits._
+    pairs.select(col("f"), col("p")).as[(String, Long)]
+      .sortWithinPartitions("f", "p")
+      .mapPartitions { rows =>
+        val buf = rows.buffered
+        new Iterator[(String, String)] {
+          def hasNext: Boolean = buf.hasNext
+          def next(): (String, String) = {
+            dvBitmapsBuilt.incrementAndGet()
+            val base = buf.head._1
+            val run = new Iterator[Long] {
+              def hasNext: Boolean = buf.hasNext && buf.head._1 == base
+              def next(): Long = buf.next()._2
+            }
+            val bm = graft.functions.DeleteBitmap.fromAscending(run)
+            (base, FileEntry.encodeDvAscending(bm.iterator))
+          }
+        }
+      }
+      .collect()
+      .groupMapReduce(_._1)(r =>
+        graft.functions.DeleteBitmap.fromAscending(FileEntry.dvIterator(r._2)))(
+        _ union _)
+  }
+
+  /** `entries` with each file named in `byBase` (basename → bitmap)
+    * carrying the UNION of its existing vector and the new one. */
+  private[graft] def withVectors(entries: Seq[FileEntry],
+                                 byBase: Map[String, graft.functions.DeleteBitmap])
+      : Seq[FileEntry] =
+    if (byBase.isEmpty) entries
+    else entries.map { e =>
+      byBase.get(e.path.substring(e.path.lastIndexOf('/') + 1))
+        .fold(e)(bm => e.withDeletedBitmap(e.deletedBitmap.union(bm)))
+    }
+
+  /** Run `body` with `spark.sql.files.minPartitionNum` = 1 (see
+    * [[SnapshotTable.withSizeDerivedSplits]]). Scopes nest and overlap
+    * across threads: a depth count under one lock means only the
+    * OUTERMOST scope of a session saves the prior value and only the
+    * last one to close restores it — a save/restore pair per scope
+    * would let an inner or interleaved scope "restore" the floor of 1
+    * it found set by another, leaving it on the session for good. */
+  private[graft] def sizeDerivedSplits[A](spark: SparkSession)(body: => A): A = {
+    splitScopes.synchronized {
+      splitScopes.get(spark) match {
+        case Some((depth, saved)) => splitScopes(spark) = (depth + 1, saved)
+        case None =>
+          splitScopes(spark) = (1, spark.conf.getOption(MinPartitionNumKey))
+          spark.conf.set(MinPartitionNumKey, "1")
+      }
+    }
+    try body
+    finally splitScopes.synchronized {
+      val (depth, saved) = splitScopes(spark)
+      if (depth > 1) splitScopes(spark) = (depth - 1, saved)
+      else {
+        splitScopes.remove(spark)
+        saved match {
+          case Some(v) => spark.conf.set(MinPartitionNumKey, v)
+          case None => spark.conf.unset(MinPartitionNumKey)
+        }
+      }
+    }
+  }
+
   /** Deletion-vector bitmaps built by [[SnapshotTable.deleteMoR]]'s
     * streaming per-file pass — observability hook for the spec proving
     * the over-cap path fails BEFORE any bitmap is built (in local mode
@@ -4121,26 +4313,6 @@ object SnapshotTable {
     * column collides). */
   private[graft] val PosFileCol = "__graft_pos_file"
   private[graft] val PosIdxCol = "__graft_pos_idx"
-
-  /** Guard for the one remaining scan path that CANNOT apply deletion
-    * vectors — the STREAMING source's per-commit file replay
-    * ([[graft.sources.GraftMicroBatchStream]]), whose delivery unit is
-    * whole files (a vector change doesn't add files, so new deletes
-    * could never re-deliver): serving a DV'd snapshot there would
-    * silently resurrect deleted rows, so it fails loudly with the
-    * remedy instead. Batch DSv2/SQL reads and SQL DML no longer need
-    * it ([[graft.sources.GraftDvReaderFactory]] applies vectors
-    * in-scan). */
-  private[graft] def requireNoDeletionVectors(entries: Seq[FileEntry],
-                                              what: String): Unit = {
-    val dvd = entries.count(_.hasDeletes)
-    if (dvd > 0)
-      throw new IllegalStateException(
-        s"$what: snapshot carries deletion vectors on $dvd file(s), " +
-          "which this scan path cannot apply — read through the " +
-          "SnapshotTable API, or materialize them first with " +
-          "purgeDeletes()/compact()")
-  }
 
   /** The Hive-dir-encoded partition value(s) of a table-relative file
     * path, "/"-joined for multi-level layouts ("F/5" for

@@ -42,28 +42,34 @@ import graft.plans.SnapshotTable.FileEntry
   *
   *  - a file ADDED at v → its visible rows as `after` images,
   *  - a file REMOVED at v → its previously-visible rows as `before`,
-  *  - a file whose DELETION VECTOR grew at v (deleteMoR) → ONLY the
-  *    newly-hidden positions as `before` images — bytes-identical
-  *    files never re-read whole,
+  *  - a file whose DELETION VECTOR grew at v (deleteMoR, or the
+  *    merge-on-read side of an upsert) → ONLY the newly-hidden
+  *    positions as `before` images — bytes-identical files never
+  *    re-read whole,
   *  - carried-over files → nothing.
   *
   * Contract vs [[SnapshotTable.changesDelta]]: per commit, the
   * streamed multiset NET of canceling (before, after) pairs equals
-  * `changesDelta(v-1, v)` exactly. The pairs exist because a rewrite
-  * re-delivers its file's unchanged rows as one `before` + one
-  * `after` — which cancel in any incremental fold — while
-  * `changesDelta` spends a shuffle to cancel them up front. A
+  * `changesDelta(v-1, v)` exactly. The pairs exist because a
+  * copy-on-write rewrite re-delivers its file's unchanged rows as one
+  * `before` + one `after` — which cancel in any incremental fold —
+  * while `changesDelta` spends a shuffle to cancel them up front. A
   * STREAMING source cannot run that shuffle inside partition
   * planning; shipping the raw pair algebra keeps delivery a pure
-  * file scan at any scale. Pure appends, MoR deletes and inserts
-  * stream with no extra pairs at all.
+  * file scan at any scale. Pure appends, MoR deletes, inserts and
+  * merge-on-read upserts stream with no extra pairs at all: such an
+  * upsert's `before` images are exactly the rows it replaced (the
+  * positions its vectors newly hide) and its `after` images exactly
+  * its batch. A re-sent row identical to the one it replaces still
+  * streams as such a (before, after) pair.
   *
-  * Positions are counted by the reader (file order), so DV'd and
-  * position-filtered files plan as UNSPLIT whole-file partitions with
-  * no pushed filters — the same invariant [[GraftDvReaderFactory]]
-  * relies on; clean `after`/`before` files without a position filter
-  * still read whole here (the factory is filter-free by
-  * construction, CDC reads are full-row by nature). */
+  * Positions are counted by the reader (file order), so every file
+  * reads UNSPLIT and whole, with no pushed filters and its own position
+  * count — the same invariant [[GraftDvReaderFactory]] relies on; clean
+  * `after`/`before` files without a position filter read whole too (the
+  * factory is filter-free by construction, CDC reads are full-row by
+  * nature). A task reads several such files one after another, packed
+  * the way Spark packs a file scan. */
 private[sources] final class GraftCdcScanBuilder(
     spark: SparkSession,
     tablePath: String,
@@ -229,13 +235,13 @@ private[sources] final class GraftCdcPlanner(
   private def entriesAt(v: Long): Seq[FileEntry] =
     snapshot.retainedEntriesAt(v, "change-feed")
 
-  /** One whole-file partition per entry (positions are counted by the
+  /** One whole-file read unit per entry (positions are counted by the
     * reader, so splits are forbidden), carrying the image tag, the
     * commit version, and the entry's position filter. */
   private def filePartitions(entries: Seq[FileEntry], image: String,
                              version: Long,
                              keepOnly: Map[String, Array[Long]] = Map.empty)
-      : Seq[GraftCdcInputPartition] = {
+      : Seq[GraftCdcFile] = {
     if (entries.isEmpty) return Nil
     // a span that crosses a partition-spec evolution would silently
     // MIS-DECODE pre-evolution files: dir values zip to partSchema
@@ -261,10 +267,40 @@ private[sources] final class GraftCdcPlanner(
           SparkPath.fromPath(f.getPath), 0L, f.getLen,
           Array.empty[String], f.getModificationTime, f.getLen,
           Map.empty)
-        GraftCdcInputPartition(FilePartition(0, Array(pf)), image, version,
+        GraftCdcFile(pf, image, version,
           drop = entry.deletedRows, keep = keepOnly.get(base).orNull)
       }
     }
+  }
+
+  /** Pack whole-file units into input partitions the way Spark packs a
+    * file scan (largest first; a partition closes when the next file
+    * would overflow the split size, each file also costing the open
+    * cost; split size from the same confs), so a span of many small
+    * files reads in a few tasks instead of one task per file. Each unit
+    * still reads whole, with its own position count. */
+  private def packed(units: Seq[GraftCdcFile]): Array[InputPartition] = {
+    if (units.isEmpty) return Array.empty
+    val conf = spark.sessionState.conf
+    val openCost = conf.filesOpenCostInBytes
+    val perCore = units.map(_.pf.length + openCost).sum /
+      conf.filesMinPartitionNum.getOrElse(spark.sparkContext.defaultParallelism)
+    val maxSplit = math.min(conf.filesMaxPartitionBytes,
+      math.max(openCost, perCore))
+    val out = Array.newBuilder[InputPartition]
+    var cur = Vector.empty[GraftCdcFile]
+    var size = 0L
+    units.sortBy(-_.pf.length).foreach { u =>
+      if (cur.nonEmpty && size + u.pf.length > maxSplit) {
+        out += GraftCdcInputPartition(cur)
+        cur = Vector.empty
+        size = 0L
+      }
+      cur :+= u
+      size += u.pf.length + openCost
+    }
+    out += GraftCdcInputPartition(cur)
+    out.result()
   }
 
   /** All change partitions committed in versions (vs, ve].
@@ -283,8 +319,8 @@ private[sources] final class GraftCdcPlanner(
     if (ve <= vs)
       return Array.empty
     if (vs == 0L && collapseInitial)
-      return filePartitions(entriesAt(ve), "after", ve).toArray
-    val out = Seq.newBuilder[GraftCdcInputPartition]
+      return packed(filePartitions(entriesAt(ve), "after", ve))
+    val out = Seq.newBuilder[GraftCdcFile]
     var prev = if (vs == 0L) Seq.empty[FileEntry] else entriesAt(vs)
     var v = vs + 1
     while (v <= ve) {
@@ -324,7 +360,7 @@ private[sources] final class GraftCdcPlanner(
       prev = cur
       v += 1
     }
-    out.result().toArray
+    packed(out.result())
   }
 }
 
@@ -333,41 +369,59 @@ private[sources] final class GraftCdcPlanner(
   * `drop` hides positions (the file's deletion vector at the image's
   * visibility), `keep` (when non-null) restricts to exactly those
   * positions (DV-diff before images). Both sorted ascending. */
+private[sources] final case class GraftCdcFile(
+    pf: PartitionedFile, image: String, version: Long,
+    drop: Array[Long], keep: Array[Long])
+
+/** The read units one change-feed task reads, one file after another. */
 private[sources] final case class GraftCdcInputPartition(
-    fp: FilePartition, image: String, version: Long,
-    drop: Array[Long], keep: Array[Long]) extends InputPartition {
-  override def preferredLocations(): Array[String] = fp.preferredLocations()
+    files: Seq[GraftCdcFile]) extends InputPartition {
+  override def preferredLocations(): Array[String] =
+    FilePartition(0, files.map(_.pf).toArray).preferredLocations()
 }
 
-/** Wraps the filter-free parquet row reader with the position filter
-  * and appends the two constant change columns. Row-based throughout
-  * (position counting; CDC consumers read full rows). */
+/** Reads a partition's units one file at a time — each through its
+  * own filter-free parquet row reader, so the position count restarts
+  * at every file — applying the unit's position filter and appending
+  * its two constant change columns. Row-based throughout (position
+  * counting; CDC consumers read full rows). */
 private[sources] final class GraftCdcReaderFactory(
     inner: PartitionReaderFactory) extends PartitionReaderFactory {
 
   override def supportColumnarReads(p: InputPartition): Boolean = false
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val cdc = p.asInstanceOf[GraftCdcInputPartition]
-    val constants = new GenericInternalRow(Array[Any](
-      UTF8String.fromString(cdc.image), cdc.version))
-    val it = inner.createReader(cdc.fp)
+    val units = p.asInstanceOf[GraftCdcInputPartition].files.iterator
     new PartitionReader[InternalRow] {
+      private var cdc: GraftCdcFile = _
+      private var it: PartitionReader[InternalRow] = _
+      private var constants: InternalRow = _
       private var pos = -1L
       private val joined = new JoinedRow
       override def next(): Boolean = {
-        while (it.next()) {
-          pos += 1
-          val visible =
-            if (cdc.keep != null)
-              java.util.Arrays.binarySearch(cdc.keep, pos) >= 0
-            else java.util.Arrays.binarySearch(cdc.drop, pos) < 0
-          if (visible) return true
+        while (it != null || units.hasNext) {
+          if (it == null) {
+            cdc = units.next()
+            it = inner.createReader(FilePartition(0, Array(cdc.pf)))
+            constants = new GenericInternalRow(Array[Any](
+              UTF8String.fromString(cdc.image), cdc.version))
+            pos = -1L
+          }
+          while (it.next()) {
+            pos += 1
+            val visible =
+              if (cdc.keep != null)
+                java.util.Arrays.binarySearch(cdc.keep, pos) >= 0
+              else java.util.Arrays.binarySearch(cdc.drop, pos) < 0
+            if (visible) return true
+          }
+          it.close()
+          it = null
         }
         false
       }
       override def get(): InternalRow = joined(it.get(), constants)
-      override def close(): Unit = it.close()
+      override def close(): Unit = if (it != null) it.close()
     }
   }
 }

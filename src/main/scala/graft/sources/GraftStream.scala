@@ -293,12 +293,19 @@ private[sources] final class GraftScan(
   * the checkpointed version.
   *
   * Delivery contract: file-level, at-least-once per row image. Blind
-  * [[SnapshotTable.append]] tables stream exactly-once per row.
-  * Upsert/delete commits rewrite whole partitions, so a merge delivers
-  * the rewritten partition's rows (new images AND carried rows) —
-  * downstream either dedups by key (the engine's idempotent-merge
-  * stance) or consumes append-only tables. Compaction likewise
-  * re-delivers what it rewrites (same caveat as Delta without CDF).
+  * [[SnapshotTable.append]] tables stream exactly-once per row. A
+  * merge-on-read upsert (a batch smaller than the slice it touches —
+  * see [[SnapshotTable.upsert]]) writes only its batch and hides the
+  * replaced rows with deletion vectors, so it delivers only the new
+  * images; hidden rows are never re-delivered (this feed carries
+  * images, not deletes — `readChangeFeed` carries both), and the
+  * initial snapshot is read through its vectors. A copy-on-write
+  * merge or a copy-on-write delete rewrites whole partitions and so
+  * delivers the rewritten partition's rows (new images AND carried
+  * rows) — downstream either dedups by key (the engine's
+  * idempotent-merge stance) or consumes append-only tables.
+  * Compaction likewise re-delivers what it rewrites (same caveat as
+  * Delta without CDF).
   * Vacuuming past a stream's checkpointed offset fails the stream with
   * an explicit message (the history it needs is gone), never a raw
   * missing-file crash loop.
@@ -414,16 +421,12 @@ private[sources] final class GraftMicroBatchStream(
     opts: CaseInsensitiveStringMap)
     extends GraftVersionedStream(tablePath, opts) {
 
-  private def entriesAt(v: Long): Seq[SnapshotTable.FileEntry] = {
-    val es = rawEntriesAt(v)
-    // the FILE-replay scan is the same no-row-filter parquet stack,
-    // and delivery is whole files: a deletion-vector change adds no
-    // file, so its newly-hidden rows could never re-deliver — serve
-    // CDC instead (`readChangeFeed`, DV-aware) or purge first
-    SnapshotTable.requireNoDeletionVectors(es,
-      s"streaming read of $tablePath@v$v")
-    es
-  }
+  /** The scan the LAST planned micro-batch reads through: the
+    * template over that batch's files, wrapped DV-aware
+    * ([[GraftScan]]) when a delivered file carries a deletion vector.
+    * Spark plans a batch's partitions before asking for its reader
+    * factory, so [[createReaderFactory]] answers from the same scan. */
+  @volatile private var batchScan: ParquetScan = template
 
   override def planInputPartitions(start: Offset,
                                    end: Offset): Array[InputPartition] = {
@@ -431,17 +434,17 @@ private[sources] final class GraftMicroBatchStream(
     val ve = end.asInstanceOf[GraftOffset].version
     if (ve <= vs) return Array.empty
     val delta =
-      if (vs == 0L) entriesAt(ve) // initial batch: the whole snapshot
+      if (vs == 0L) rawEntriesAt(ve) // initial batch: the whole snapshot
       else {
         // per-commit walk, not a net vs→ve set-diff: a file added at
         // some v and rewritten away before ve never shows in the net
         // diff, silently dropping its rows from the stream. File paths
         // are write-unique, so the union needs no dedup.
         val added = Seq.newBuilder[SnapshotTable.FileEntry]
-        var prev = entriesAt(vs).map(_.path).toSet
+        var prev = rawEntriesAt(vs).map(_.path).toSet
         var v = vs + 1
         while (v <= ve) {
-          val cur = entriesAt(v)
+          val cur = rawEntriesAt(v)
           added ++= cur.filterNot(e => prev(e.path))
           prev = cur.map(_.path).toSet
           v += 1
@@ -463,13 +466,24 @@ private[sources] final class GraftMicroBatchStream(
           "checkpoint (and migrateSpec() to unify remaining vintages)"))
     val idx = new ManifestFileIndex(spark, snapshot.dataDirPath, delta,
       template.fileIndex.partitionSchema)
+    // a delivered file is read with the vector it carries in the
+    // version that delivers it: the whole snapshot's vectors for the
+    // initial batch (rows a merge or deleteMoR hid never stream), none
+    // for a file a commit just added (new files carry no vector; its
+    // rows are the commit's new images, and a LATER vector hides
+    // nothing already delivered — this feed is images, not deletes)
+    val dvs = delta.filter(_.hasDeletes).map(e =>
+      e.path.substring(e.path.lastIndexOf('/') + 1) -> e.deletedBitmap).toMap
     // same pruned columns, pushed filters and options as the batch
     // scan — only the file set differs
-    template.copy(fileIndex = idx).toBatch.planInputPartitions()
+    val scan = template.copy(fileIndex = idx)
+    batchScan =
+      if (dvs.isEmpty) scan else new GraftScan(tablePath, None, scan, dvs)
+    batchScan.toBatch.planInputPartitions()
   }
 
-  /** Row decoding depends only on the scan shape, not the file set —
-    * the template's factory serves every micro-batch. */
+  /** Row decoding depends only on the scan shape and the batch's
+    * vectors — see [[batchScan]]. */
   override def createReaderFactory(): PartitionReaderFactory =
-    template.toBatch.createReaderFactory()
+    batchScan.toBatch.createReaderFactory()
 }

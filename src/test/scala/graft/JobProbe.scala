@@ -79,8 +79,9 @@ object JobProbe {
       val df = SparkEntry.queries(n)(spark, sfDir)
       df.agg(bit_xor(xxhash64(df.columns.toIndexedSeq.map(col): _*))).head()
       val wall = (System.nanoTime() - t0) / 1e9
-      // listener events are async; give the bus a moment to drain
-      Thread.sleep(300)
+      // listener events are async: wait until the bus delivered every
+      // event posted so far (the entry's job-end events included)
+      org.apache.spark.graft.ListenerBusDrain.drain(spark.sparkContext)
       println(f"[jobs] $n%-28s ${wall}%5.2f ${jobs.get}%5d ${stages.get}%6d " +
         f"${tasks.get}%6d ${taskNanos.get / 1e9}%7.2f " +
         f"${shuffleRead.get / 1e6}%8.2f ${shuffleWrite.get / 1e6}%8.2f")

@@ -93,6 +93,50 @@ class PipelineRetrySpec extends SparkSpec {
       List(scala.util.Success(true)))
   }
 
+  test("two runs over one raw prefix each load their own drop; no cache outlives a run") {
+    val base = Files.createTempDirectory("graft_pipe_twice").toString
+    val schema = org.apache.spark.sql.types.StructType(
+      Seq("product_id", "department_id", "department", "product_name").map(
+        org.apache.spark.sql.types.StructField(_,
+          org.apache.spark.sql.types.StringType)))
+    // every drop lands as the same file name, as a fixed landing
+    // prefix does: the second run's scan plan equals the first's
+    def drop(rows: (String, String, String, String)*): Unit = {
+      val dir = new java.io.File(s"$base/raw/products")
+      dir.mkdirs()
+      val w = new java.io.PrintWriter(new java.io.File(dir, "drop.csv"), "UTF-8")
+      try {
+        w.println("product_id,department_id,department,product_name")
+        rows.foreach(r => w.println(r.productIterator.mkString(",")))
+      } finally w.close()
+    }
+    def run(): Pipeline.Report =
+      Pipeline.run(spark, s"$base/raw", s"$base/dwh", s"$base/rejected",
+        s"$base/archived",
+        jobs = Seq(Pipeline.JobSpec("products", schema, "product_id",
+          "department_id")),
+        retryAttempts = 1, retryDelayMs = 1)
+    def names(): Map[String, String] =
+      SnapshotTable(spark, s"$base/dwh/products", "product_id").read
+        .collect().map(r => r.getAs[String]("product_id") ->
+          r.getAs[String]("product_name")).toMap
+    spark.catalog.clearCache()
+    drop(("1", "d1", "dep", "widget"), ("2", "d1", "dep", "gadget"))
+    val first = run().jobs.head
+    assert(first.read == 2 && first.loaded == 2)
+    assert(names() == Map("1" -> "widget", "2" -> "gadget"))
+    // the second drop lands under the same prefix the first was
+    // archived from: its validation must read it, not the first's
+    drop(("1", "d1", "dep", "widget v2"), ("3", "d2", "dep", "gizmo"),
+      ("4", "d2", "dep", "doohickey"))
+    val second = run().jobs.head
+    assert(second.read == 3 && second.loaded == 4)
+    assert(names() == Map("1" -> "widget v2", "2" -> "gadget",
+      "3" -> "gizmo", "4" -> "doohickey"))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a pipeline run left a cached frame registered in the session")
+  }
+
   test("T8 hook: a job that exhausts retries notifies failure exactly once, then rethrows") {
     val base = Files.createTempDirectory("graft_pipe_t8").toString
     val schema = org.apache.spark.sql.types.StructType(Seq(

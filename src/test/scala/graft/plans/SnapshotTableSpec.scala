@@ -2530,9 +2530,13 @@ class SnapshotTableSpec extends SparkSpec {
     t.create((1 to 400).map(i => (i, i, s"v$i")).toDF("id", "k", "val"))
     val before = t.scanInfo()._1.map(_.path).toSet
     assert(before.size == 8)
-    // batch confined to k∈[10,20]: update two ids, insert one new
-    t.upsert(Seq((10, 10, "V10"), (20, 20, "V20"), (401, 15, "v401"))
-      .toDF("id", "k", "val"))
+    // batch confined to k∈[10,20]: update two ids, insert 148 new —
+    // at least as many rows as the touched files hold, so the merge
+    // stays on the copy-on-write side of the plan rule (smaller
+    // batches hide replaced rows with deletion vectors instead)
+    val batch = (Seq((10, 10, "V10"), (20, 20, "V20")) ++
+      (401 to 548).map(i => (i, 10 + i % 11, s"v$i"))).toDF("id", "k", "val")
+    t.upsert(batch)
     val after = t.scanInfo()._1.map(_.path).toSet
     val carried = before intersect after
     assert(carried.nonEmpty, "no file carried over — merge was O(table)")
@@ -2540,13 +2544,13 @@ class SnapshotTableSpec extends SparkSpec {
     val m = t.candidateFiles(("k", 10, 20)).map(_.path).toSet
     assert(carried.forall(!m.contains(_)),
       s"a file overlapping the batch range was not rewritten: ${carried & m}")
+    assert(t.scanInfo()._1.forall(!_.hasDeletes), "copy-on-write left a vector")
     val got = t.read.orderBy("id").collect()
-    assert(got.length == 401)
+    assert(got.length == 548)
     assert(got.count(_.getString(2).startsWith("V")) == 2)
     // idempotent re-run
-    t.upsert(Seq((10, 10, "V10"), (20, 20, "V20"), (401, 15, "v401"))
-      .toDF("id", "k", "val"))
-    assert(t.read.count() == 401)
+    t.upsert(batch)
+    assert(t.read.count() == 548)
   }
 
   test("upsert batch omitting a statted cluster column is refused with guidance") {
