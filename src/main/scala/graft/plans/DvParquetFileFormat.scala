@@ -48,8 +48,7 @@ private[graft] final class DvParquetFileFormat(
       partitionSchema, requiredSchema, Nil, options, hadoopConf)
     val bc = spark.sparkContext.broadcast(dvByBase)
     (file: PartitionedFile) => {
-      val p = file.filePath.toString
-      bc.value.get(p.substring(p.lastIndexOf('/') + 1)) match {
+      bc.value.get(SnapshotTable.basename(file.filePath.toString)) match {
         case None => pushed(file)
         case Some(dv) =>
           var pos = -1L

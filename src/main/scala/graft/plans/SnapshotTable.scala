@@ -7,6 +7,8 @@ import scala.collection.mutable
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{
+  HadoopFsRelation, LogicalRelationWithTable}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, DateType,
   DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType,
@@ -162,8 +164,7 @@ final class SnapshotTable(
     * upsert inside its own scope, and a stream thread's commit may
     * overlap a user thread's DML on the same session. */
   private def withSizeDerivedSplits[A](body: => A): A =
-    if (sys.env.contains("GRAFT_NO_SIZED_SPLITS")) body
-    else SnapshotTable.sizeDerivedSplits(spark)(body)
+    SnapshotTable.sizeDerivedSplits(spark)(body)
 
   // ---- commit-log format (Delta-log pattern, two record kinds):
   //  * `v<n>.delta` — the version's ATOMIC commit point: full header
@@ -2675,7 +2676,7 @@ final class SnapshotTable(
       .join(knock.select(primaryKey), Seq(primaryKey), "left_semi")
     val byBase = timed("mor-probe")(SnapshotTable.deleteBitmapsOf(pairs))
     val (hit, clean) = touched.partition(e =>
-      byBase.contains(e.path.substring(e.path.lastIndexOf('/') + 1)))
+      byBase.contains(SnapshotTable.basename(e.path)))
     commitMerge(v, m, kept ++ clean, fresh, schema, scope,
       vectored = SnapshotTable.withVectors(hit, byBase))
   }
@@ -2910,13 +2911,10 @@ final class SnapshotTable(
     // the probe sees through EXISTING vectors (same filter readFiles
     // applies): an already-deleted row must not re-enter its file's
     // vector, so re-running the same delete is a clean no-op
-    val bcOld = spark.sparkContext.broadcast(
-      cands.filter(_.hasDeletes).map(e =>
-        e.path.substring(e.path.lastIndexOf('/') + 1) -> e.deletedBitmap)
-        .toMap)
+    val bcOld = spark.sparkContext.broadcast(SnapshotTable.vectorsOf(cands))
     val visible = udf { (file: String, idx: Long) =>
-      val base = file.substring(file.lastIndexOf('/') + 1)
-      bcOld.value.get(base).forall(dv => !dv.contains(idx))
+      bcOld.value.get(SnapshotTable.basename(file))
+        .forall(dv => !dv.contains(idx))
     }
     // matched positions are aggregated into one compressed bitmap PER
     // FILE on the executors ([[SnapshotTable.deleteBitmapsOf]]). That is
@@ -3055,7 +3053,7 @@ final class SnapshotTable(
     // which files hold a TRUE row, and does any visible row survive?
     // O(distinct files) rows cross the driver, never data. Basenames
     // are commit-UUID-prefixed, hence unique across the whole table.
-    def basename(p: String): String = p.substring(p.lastIndexOf('/') + 1)
+    import SnapshotTable.basename
     val hit = readFiles(cands, m.schema)
       .groupBy(input_file_name().as("__f"))
       .agg(
@@ -3156,9 +3154,8 @@ final class SnapshotTable(
     * upsert merges, compaction or the DML probe paths. */
   private def readFiles(entries: Seq[FileEntry],
                         manifestSchema: Option[StructType] = None): DataFrame =
-    readFilesRaw(entries, manifestSchema, vectors = entries.filter(_.hasDeletes)
-      .map(e => e.path.substring(e.path.lastIndexOf('/') + 1) -> e.deletedBitmap)
-      .toMap)
+    readFilesRaw(entries, manifestSchema,
+      vectors = SnapshotTable.vectorsOf(entries))
 
   /** Read a file set, planning from manifest metadata when possible.
     *
@@ -3236,7 +3233,7 @@ final class SnapshotTable(
             spec.flatMap(c => schema.fields.find(_.name == c)))
           val dataSchema = StructType(
             schema.fields.filterNot(f => spec.contains(f.name)))
-          val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+          val rel = HadoopFsRelation(
             new ManifestFileIndex(spark, dataDir, es, partSchema),
             partSchema, dataSchema, None,
             if (vectors.isEmpty)
@@ -3262,23 +3259,22 @@ final class SnapshotTable(
     // is one FS metadata op instead.
     val r = spark.read.option("basePath", dataDir)
       .option("mergeSchema", fs.exists(evolvedMarker).toString)
-    val frame = effective.fold(r)(s => r.schema(s))
+    val listed = effective.fold(r)(s => r.schema(s))
       .parquet(entries.map(e => s"$dataDir/${e.path}"): _*)
-    val cols = frame.columns.toIndexedSeq.map(col)
-    if (vectors.nonEmpty) {
-      // a listed read takes no custom format: filter on the scan's own
-      // row positions instead (≤ 2 bytes per hidden row broadcast)
-      val bc = spark.sparkContext.broadcast(vectors)
-      val keep = udf { (file: String, idx: Long) =>
-        bc.value.get(file.substring(file.lastIndexOf('/') + 1))
-          .forall(dv => !dv.contains(idx))
+    // vectors apply inside the reader here too: the relation the
+    // listing resolved (its files, schema and options) re-read through
+    // the vector-applying format
+    val frame =
+      if (vectors.isEmpty) listed
+      else listed.queryExecution.analyzed match {
+        case LogicalRelationWithTable(fsRel: HadoopFsRelation, _) =>
+          spark.baseRelationToDataFrame(fsRel.copy(
+            fileFormat = new DvParquetFileFormat(vectors))(spark))
+        case other => throw new IllegalStateException(
+          s"listed read of $path planned ${other.nodeName}, not a file relation")
       }
-      frame.select(cols ++ posCols: _*)
-        .filter(keep(col(SnapshotTable.PosFileCol), col(SnapshotTable.PosIdxCol)))
-        .select(cols: _*)
-    }
-    else if (!withPos) frame
-    else frame.select(cols ++ posCols: _*)
+    if (!withPos) frame
+    else frame.select(frame.columns.toIndexedSeq.map(col) ++ posCols: _*)
   }
 
   /** Planning inputs for an external scan of one snapshot (the DSv2
@@ -3440,9 +3436,9 @@ final class SnapshotTable(
         if (grown.isEmpty) None
         else {
           val bc = spark.sparkContext.broadcast(grown.map { case (o, bm) =>
-            o.path.substring(o.path.lastIndexOf('/') + 1) -> bm }.toMap)
+            SnapshotTable.basename(o.path) -> bm }.toMap)
           val newlyHidden = udf { (file: String, idx: Long) =>
-            bc.value(file.substring(file.lastIndexOf('/') + 1)).contains(idx)
+            bc.value(SnapshotTable.basename(file)).contains(idx)
           }
           val raw = readFilesRaw(grown.map(_._1), mFrom.schema, withPos = true)
           Some(raw.filter(newlyHidden(
@@ -4123,6 +4119,19 @@ object SnapshotTable {
         _ union _)
   }
 
+  /** A data file's basename — commit-UUID-prefixed, hence unique
+    * across the whole table: the key deletion vectors are looked up by. */
+  private[graft] def basename(path: String): String =
+    path.substring(path.lastIndexOf('/') + 1)
+
+  /** basename → deletion bitmap for every entry carrying a vector —
+    * the one map every vector-applying read (API, DSv2 scan, stream,
+    * SQL DML) is handed. Empty for a clean file set. */
+  private[graft] def vectorsOf(entries: Seq[FileEntry])
+      : Map[String, graft.functions.DeleteBitmap] =
+    entries.iterator.filter(_.hasDeletes)
+      .map(e => basename(e.path) -> e.deletedBitmap).toMap
+
   /** `entries` with each file named in `byBase` (basename → bitmap)
     * carrying the UNION of its existing vector and the new one. */
   private[graft] def withVectors(entries: Seq[FileEntry],
@@ -4130,7 +4139,7 @@ object SnapshotTable {
       : Seq[FileEntry] =
     if (byBase.isEmpty) entries
     else entries.map { e =>
-      byBase.get(e.path.substring(e.path.lastIndexOf('/') + 1))
+      byBase.get(basename(e.path))
         .fold(e)(bm => e.withDeletedBitmap(e.deletedBitmap.union(bm)))
     }
 

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FileSourceOptions, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{
   GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.connector.read.{
@@ -11,12 +11,15 @@ import org.apache.spark.sql.connector.read.{
 import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.execution.datasources.{
   FilePartition, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
+import org.apache.spark.sql.execution.datasources.v2.FilePartitionReaderFactory
+import org.apache.spark.sql.execution.datasources.v2.parquet.{
+  ParquetPartitionReaderFactory, ParquetScanBuilder}
 import org.apache.spark.sql.types.{LongType, StringType, StructField,
   StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.functions.DeleteBitmap
 import graft.plans.{ManifestFileIndex, SnapshotTable}
 import graft.plans.SnapshotTable.FileEntry
 
@@ -63,13 +66,15 @@ import graft.plans.SnapshotTable.FileEntry
   * its batch. A re-sent row identical to the one it replaces still
   * streams as such a (before, after) pair.
   *
-  * Positions are counted by the reader (file order), so every file
-  * reads UNSPLIT and whole, with no pushed filters and its own position
-  * count — the same invariant [[GraftDvReaderFactory]] relies on; clean
-  * `after`/`before` files without a position filter read whole too (the
-  * factory is filter-free by construction, CDC reads are full-row by
-  * nature). A task reads several such files one after another, packed
-  * the way Spark packs a file scan. */
+  * Each read unit is one whole parquet file as a `PartitionedFile`
+  * (`start = 0`, `length = fileSize`) carrying its image, commit version
+  * and position filter as per-file constants. Positions are counted by
+  * the reader (file order), so no unit is split and none has pushed
+  * filters (the inner factory is filter-free by construction, CDC reads
+  * are full-row by nature). Spark's own `FilePartition` packing puts
+  * several units in one task, and the inherited per-file reader opens
+  * each with a position count of its own — the same per-file reader
+  * and position filter ([[GraftDvRowReader]]) the snapshot scan uses. */
 private[sources] final class GraftCdcScanBuilder(
     spark: SparkSession,
     tablePath: String,
@@ -121,6 +126,14 @@ private[sources] object GraftCdc {
   def shape(dataFields: Seq[StructField],
             partFields: Seq[StructField]): StructType =
     StructType(dataFields ++ partFields ++ Array(ImageField, VersionField))
+
+  // the per-file constants a read unit carries in its PartitionedFile's
+  // `otherConstantMetadataColumnValues`: image tag, commit version, and
+  // the position filter (a DeleteBitmap; `keepOnly` selects its sense)
+  val ImageKey = "graft.cdc.image"
+  val VersionKey = "graft.cdc.version"
+  val PositionsKey = "graft.cdc.positions"
+  val KeepOnlyKey = "graft.cdc.keepOnly"
 }
 
 private[sources] final class GraftCdcScan(
@@ -158,13 +171,13 @@ private[sources] final class GraftCdcScan(
     * across schema evolution). An empty scan-time file index is fine:
     * the factory's row decoding depends only on the SCHEMA; the files
     * come from each planned partition. */
-  private[sources] def innerFactory(): PartitionReaderFactory = {
+  private[sources] def innerFactory(): ParquetPartitionReaderFactory = {
     val idx = new ManifestFileIndex(
       spark, snapshot.dataDirPath, headEntries, partSchema)
     val b = ParquetScanBuilder(spark, idx, tableSchema, dataSchema,
       CaseInsensitiveStringMap.empty())
     b.pruneColumns(StructType(dataSchema.fields ++ partSchema.fields))
-    b.build().createReaderFactory()
+    b.build().createReaderFactory().asInstanceOf[ParquetPartitionReaderFactory]
   }
 
   private[sources] def planner: GraftCdcPlanner =
@@ -237,11 +250,13 @@ private[sources] final class GraftCdcPlanner(
 
   /** One whole-file read unit per entry (positions are counted by the
     * reader, so splits are forbidden), carrying the image tag, the
-    * commit version, and the entry's position filter. */
-  private def filePartitions(entries: Seq[FileEntry], image: String,
-                             version: Long,
-                             keepOnly: Map[String, Array[Long]] = Map.empty)
-      : Seq[GraftCdcFile] = {
+    * commit version and the entry's position filter: its deletion
+    * vector at the image's visibility, or — for the entries named in
+    * `keepOnly` — exactly those positions (DV-diff before images). */
+  private def unitFiles(entries: Seq[FileEntry], image: String,
+                        version: Long,
+                        keepOnly: Map[String, Array[Long]] = Map.empty)
+      : Seq[PartitionedFile] = {
     if (entries.isEmpty) return Nil
     // a span that crosses a partition-spec evolution would silently
     // MIS-DECODE pre-evolution files: dir values zip to partSchema
@@ -257,50 +272,20 @@ private[sources] final class GraftCdcPlanner(
           "at or after the evolution commit"))
     val idx = new ManifestFileIndex(
       spark, snapshot.dataDirPath, entries, partSchema)
-    val byBase = entries.map(e =>
-      e.path.substring(e.path.lastIndexOf('/') + 1) -> e).toMap
+    val byBase = entries.map(e => SnapshotTable.basename(e.path) -> e).toMap
     idx.listFiles(Nil, Nil).flatMap { dir =>
       dir.files.map { f =>
         val base = f.getPath.getName
-        val entry = byBase(base)
-        val pf = new PartitionedFile(dir.values,
-          SparkPath.fromPath(f.getPath), 0L, f.getLen,
-          Array.empty[String], f.getModificationTime, f.getLen,
-          Map.empty)
-        GraftCdcFile(pf, image, version,
-          drop = entry.deletedRows, keep = keepOnly.get(base).orNull)
+        val (positions, keep) = keepOnly.get(base) match {
+          case Some(ps) => (DeleteBitmap.fromSorted(ps), true)
+          case None => (byBase(base).deletedBitmap, false)
+        }
+        PartitionedFile(dir.values, SparkPath.fromPath(f.getPath), 0L,
+          f.getLen, Array.empty[String], f.getModificationTime, f.getLen,
+          Map(GraftCdc.ImageKey -> image, GraftCdc.VersionKey -> version,
+            GraftCdc.PositionsKey -> positions, GraftCdc.KeepOnlyKey -> keep))
       }
     }
-  }
-
-  /** Pack whole-file units into input partitions the way Spark packs a
-    * file scan (largest first; a partition closes when the next file
-    * would overflow the split size, each file also costing the open
-    * cost; split size from the same confs), so a span of many small
-    * files reads in a few tasks instead of one task per file. Each unit
-    * still reads whole, with its own position count. */
-  private def packed(units: Seq[GraftCdcFile]): Array[InputPartition] = {
-    if (units.isEmpty) return Array.empty
-    val conf = spark.sessionState.conf
-    val openCost = conf.filesOpenCostInBytes
-    val perCore = units.map(_.pf.length + openCost).sum /
-      conf.filesMinPartitionNum.getOrElse(spark.sparkContext.defaultParallelism)
-    val maxSplit = math.min(conf.filesMaxPartitionBytes,
-      math.max(openCost, perCore))
-    val out = Array.newBuilder[InputPartition]
-    var cur = Vector.empty[GraftCdcFile]
-    var size = 0L
-    units.sortBy(-_.pf.length).foreach { u =>
-      if (cur.nonEmpty && size + u.pf.length > maxSplit) {
-        out += GraftCdcInputPartition(cur)
-        cur = Vector.empty
-        size = 0L
-      }
-      cur :+= u
-      size += u.pf.length + openCost
-    }
-    out += GraftCdcInputPartition(cur)
-    out.result()
   }
 
   /** All change partitions committed in versions (vs, ve].
@@ -316,11 +301,22 @@ private[sources] final class GraftCdcPlanner(
     * vacuumed, exactly like any other unretained span. */
   def planSpan(vs: Long, ve: Long,
                collapseInitial: Boolean = true): Array[InputPartition] = {
-    if (ve <= vs)
-      return Array.empty
-    if (vs == 0L && collapseInitial)
-      return packed(filePartitions(entriesAt(ve), "after", ve))
-    val out = Seq.newBuilder[GraftCdcFile]
+    val units =
+      if (ve <= vs) Nil
+      else if (vs == 0L && collapseInitial)
+        unitFiles(entriesAt(ve), "after", ve)
+      else walk(vs, ve)
+    // Spark's file-scan packing (largest first, split size from the
+    // same confs), so a span of many small files reads in a few tasks
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    FilePartition.getFilePartitions(spark, units.sortBy(-_.length),
+      FilePartition.maxSplitBytes(spark, units.map(_.length + openCost).sum))
+      .toArray
+  }
+
+  /** Every commit in (vs, ve] walked from the manifest diffs. */
+  private def walk(vs: Long, ve: Long): Seq[PartitionedFile] = {
+    val out = Seq.newBuilder[PartitionedFile]
     var prev = if (vs == 0L) Seq.empty[FileEntry] else entriesAt(vs)
     var v = vs + 1
     while (v <= ve) {
@@ -339,89 +335,55 @@ private[sources] final class GraftCdcPlanner(
         val old = dvOf(prevByPath(e.path)).toSet
         old.subsetOf(dvOf(e).toSet)
       }
-      out ++= filePartitions(
+      out ++= unitFiles(
         grown.map(e => prevByPath(e.path)), "before", v,
         keepOnly = grown.map { e =>
           val oldDv = dvOf(prevByPath(e.path)).toSet
           val newlyHidden = dvOf(e).filterNot(oldDv)
-          e.path.substring(e.path.lastIndexOf('/') + 1) -> newlyHidden
+          SnapshotTable.basename(e.path) -> newlyHidden
         }.toMap)
       // a SHRUNK/reshaped vector (no writer does this today) falls
       // back to the generic pair: full before at the old visibility,
       // full after at the new — correct for any vector change
-      out ++= filePartitions(reshaped.map(e => prevByPath(e.path)),
+      out ++= unitFiles(reshaped.map(e => prevByPath(e.path)),
         "before", v)
-      out ++= filePartitions(reshaped, "after", v)
+      out ++= unitFiles(reshaped, "after", v)
       // path-level adds and removes
-      out ++= filePartitions(
+      out ++= unitFiles(
         cur.filterNot(e => prevByPath.contains(e.path)), "after", v)
-      out ++= filePartitions(
+      out ++= unitFiles(
         prev.filterNot(e => curByPath.contains(e.path)), "before", v)
       prev = cur
       v += 1
     }
-    packed(out.result())
+    out.result()
   }
 }
 
-/** One change-feed read unit: a whole parquet file, the image it
-  * contributes, the commit it belongs to, and its position filter —
-  * `drop` hides positions (the file's deletion vector at the image's
-  * visibility), `keep` (when non-null) restricts to exactly those
-  * positions (DV-diff before images). Both sorted ascending. */
-private[sources] final case class GraftCdcFile(
-    pf: PartitionedFile, image: String, version: Long,
-    drop: Array[Long], keep: Array[Long])
-
-/** The read units one change-feed task reads, one file after another. */
-private[sources] final case class GraftCdcInputPartition(
-    files: Seq[GraftCdcFile]) extends InputPartition {
-  override def preferredLocations(): Array[String] =
-    FilePartition(0, files.map(_.pf).toArray).preferredLocations()
-}
-
-/** Reads a partition's units one file at a time — each through its
-  * own filter-free parquet row reader, so the position count restarts
-  * at every file — applying the unit's position filter and appending
-  * its two constant change columns. Row-based throughout (position
-  * counting; CDC consumers read full rows). */
+/** Reads a change-feed unit: the whole file through the filter-free
+  * parquet reader and the shared position filter, with its two
+  * constant change columns appended. The inherited `createReader`
+  * opens one such reader per unit, so each file's position count
+  * starts at 0. Row-based throughout (position counting; CDC consumers
+  * read full rows). */
 private[sources] final class GraftCdcReaderFactory(
-    inner: PartitionReaderFactory) extends PartitionReaderFactory {
+    inner: ParquetPartitionReaderFactory) extends FilePartitionReaderFactory {
 
-  override def supportColumnarReads(p: InputPartition): Boolean = false
+  override def options: FileSourceOptions = inner.options
 
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val units = p.asInstanceOf[GraftCdcInputPartition].files.iterator
+  override def buildReader(file: PartitionedFile): PartitionReader[InternalRow] = {
+    val unit = file.otherConstantMetadataColumnValues
+    val rows = new GraftDvRowReader(inner.buildReader(file),
+      unit(GraftCdc.PositionsKey).asInstanceOf[DeleteBitmap],
+      keepOnly = unit(GraftCdc.KeepOnlyKey).asInstanceOf[Boolean])
+    val constants = new GenericInternalRow(Array[Any](
+      UTF8String.fromString(unit(GraftCdc.ImageKey).asInstanceOf[String]),
+      unit(GraftCdc.VersionKey)))
+    val joined = new JoinedRow
     new PartitionReader[InternalRow] {
-      private var cdc: GraftCdcFile = _
-      private var it: PartitionReader[InternalRow] = _
-      private var constants: InternalRow = _
-      private var pos = -1L
-      private val joined = new JoinedRow
-      override def next(): Boolean = {
-        while (it != null || units.hasNext) {
-          if (it == null) {
-            cdc = units.next()
-            it = inner.createReader(FilePartition(0, Array(cdc.pf)))
-            constants = new GenericInternalRow(Array[Any](
-              UTF8String.fromString(cdc.image), cdc.version))
-            pos = -1L
-          }
-          while (it.next()) {
-            pos += 1
-            val visible =
-              if (cdc.keep != null)
-                java.util.Arrays.binarySearch(cdc.keep, pos) >= 0
-              else java.util.Arrays.binarySearch(cdc.drop, pos) < 0
-            if (visible) return true
-          }
-          it.close()
-          it = null
-        }
-        false
-      }
-      override def get(): InternalRow = joined(it.get(), constants)
-      override def close(): Unit = if (it != null) it.close()
+      override def next(): Boolean = rows.next()
+      override def get(): InternalRow = joined(rows.get(), constants)
+      override def close(): Unit = rows.close()
     }
   }
 }
@@ -434,7 +396,7 @@ private[sources] final class GraftCdcReaderFactory(
 private[sources] final class GraftCdcMicroBatchStream(
     tablePath: String,
     planner: GraftCdcPlanner,
-    factory: PartitionReaderFactory,
+    factory: ParquetPartitionReaderFactory,
     opts: CaseInsensitiveStringMap)
     extends GraftVersionedStream(tablePath, opts) {
 

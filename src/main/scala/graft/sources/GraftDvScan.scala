@@ -1,132 +1,89 @@
 package graft.sources
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.read.{
-  InputPartition, PartitionReader, PartitionReaderFactory}
-import org.apache.spark.sql.execution.datasources.{
-  FilePartition, PartitionedFile}
+import org.apache.spark.sql.catalyst.{FileSourceOptions, InternalRow}
+import org.apache.spark.sql.connector.read.PartitionReader
+import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.execution.datasources.v2.FilePartitionReaderFactory
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
+
+import graft.functions.DeleteBitmap
+import graft.plans.SnapshotTable
 
 /** MERGE-ON-READ deletion vectors applied INSIDE the DSv2 scan — what
   * lets `spark.read.format("graft")`, the SQL catalog and every
-  * Catalyst plan on top of them serve a DV'd snapshot directly, with
-  * no `purgeDeletes()`/`compact()` materialization step (the Delta
-  * scan-time-DV model; reference behavior: the Athena/Delta reads in
-  * `-Lakehouse-Architecture-for-E-Commerce-Transactions` never see
-  * deleted rows regardless of access path).
+  * Catalyst plan on top of them serve a vectored snapshot directly,
+  * with no `purgeDeletes()`/`compact()` materialization step (the
+  * Delta scan-time-DV model; reference behavior: the Athena/Delta
+  * reads in `-Lakehouse-Architecture-for-E-Commerce-Transactions`
+  * never see deleted rows regardless of access path).
   *
-  * The mechanism rests on one invariant: a parquet file read WHOLE
-  * (one partition spanning the full byte range), with NO pushed
-  * filters and NO pushed aggregate, yields its rows in file order —
-  * so the reader-side running count IS `_metadata.row_index`, and the
-  * manifest's sorted position vector filters by binary search. The
-  * planner enforces the invariant structurally:
+  * The mechanism rests on one invariant: a parquet file read WHOLE,
+  * with NO pushed filters and NO pushed aggregate, yields its rows in
+  * file order — so a running count from the file's first row IS
+  * `_metadata.row_index`, and the vector filters by membership. Spark's
+  * own file planning and this per-file reader keep it:
   *
-  *  - [[graft.sources.GraftScan]] re-packs every DV'd file into its
-  *    own single-file [[FilePartition]] (splits merged back to the
-  *    full byte range) tagged [[GraftDvInputPartition]]; DV-free
-  *    files keep Spark's normal packing, splits, pushed filters and
-  *    vectorized/columnar path untouched — only DV'd files pay.
-  *  - The DV reader factory serves tagged partitions from a twin
-  *    scan copy with EMPTY pushed filters (parquet pushdown skips
-  *    row groups and pages, which would silently renumber every
-  *    later row). Parquet pushdown is advisory — Spark keeps the
+  *  - [[graft.sources.GraftScan]] declares a vectored file unsplittable,
+  *    so Spark plans it as one whole-file `PartitionedFile` and packs it
+  *    into partitions alongside clean files and their splits.
+  *  - The inherited `createReader` opens one reader per
+  *    `PartitionedFile`; for a vectored file that is a reader from a
+  *    twin factory with EMPTY pushed filters (parquet pushdown skips
+  *    row groups and pages, which would silently renumber every later
+  *    row), wrapped in the position filter — so each file's count
+  *    starts at 0. Parquet pushdown is advisory — Spark keeps the
   *    Filter node above the scan — so dropping it costs skipping,
-  *    never correctness.
+  *    never correctness. Clean files keep their pushed filters.
   *  - Aggregate pushdown (footer-only COUNT/MIN/MAX) is refused at
-  *    the builder for DV'd snapshots: footers count deleted rows.
+  *    the builder for vectored snapshots: footers count deleted rows.
   *
   * One deliberate trade-off: `BatchScanExec` requires every partition
   * of a scan to agree on columnar-vs-row ("Cannot mix row-based and
-  * columnar input partitions"), so a scan whose PLANNED file set
-  * includes a DV'd file reads row-based throughout — clean files keep
-  * their pushed filters (row-group/page skipping) and all file-level
-  * pruning (partitions, manifest min/max, blooms, runtime DPP — sound
-  * under DVs, which only hide rows WITHIN a file), they just lose the
-  * vectorized decode. A scan whose pruning removed every DV'd file
-  * (deletes cluster in a few partitions, the query filters elsewhere)
-  * plans plain partitions and keeps the full columnar path; and DV'd
-  * state is transient by design ([[graft.plans.SnapshotTable.compact]]
-  * purges lazily, `purgeDeletes()` eagerly), so the row-based window
-  * is the gap between a point delete and the next maintenance pass —
-  * the same window in which Delta pays its own DV filter. */
-private[sources] final case class GraftDvInputPartition(fp: FilePartition)
-    extends InputPartition {
-  override def preferredLocations(): Array[String] = fp.preferredLocations()
-}
-
-/** A clean file partition of a scan that ALSO planned DV partitions:
-  * tagged so the factory answers row-based for it ("Cannot mix
-  * row-based and columnar input partitions"). A scan whose pruning
-  * removed every DV'd file plans PLAIN partitions instead and keeps
-  * the full vectorized path — the common case when deletes cluster in
-  * a few partitions and queries filter elsewhere. */
-private[sources] final case class GraftRowModePartition(fp: FilePartition)
-    extends InputPartition {
-  override def preferredLocations(): Array[String] = fp.preferredLocations()
-}
-
-/** Routes tagged DV partitions to the filter-free row reader wrapped
-  * with the position filter; everything else delegates to the normal
-  * (possibly columnar) parquet factory. Serialized to executors with
-  * the DV map inside — bounded by `graft.mor.maxDeleteRows`, the same
+  * columnar input partitions"), so a scan whose PLANNED file set holds
+  * a vectored file reads row-based throughout — clean files keep their
+  * pushed filters and all file-level pruning (partitions, manifest
+  * min/max, blooms, runtime DPP — sound under vectors, which only hide
+  * rows WITHIN a file), they just lose the vectorized decode. A scan
+  * whose pruning removed every vectored file gets the plain parquet
+  * factory and keeps the full columnar path; and vectored state is
+  * transient by design ([[graft.plans.SnapshotTable.compact]] purges
+  * lazily, `purgeDeletes()` eagerly). Serialized to executors with the
+  * vector map inside — bounded by `graft.mor.maxDeleteRows`, the same
   * budget the API read path broadcasts. */
 private[sources] final class GraftDvReaderFactory(
-    clean: PartitionReaderFactory,
-    dvSide: PartitionReaderFactory,
-    dvByBase: Map[String, graft.functions.DeleteBitmap])
-    extends PartitionReaderFactory {
+    clean: ParquetPartitionReaderFactory,
+    dvSide: ParquetPartitionReaderFactory,
+    dvByBase: Map[String, DeleteBitmap])
+    extends FilePartitionReaderFactory {
 
-  // row-based whenever the planned set carries DV or row-tagged
-  // partitions (BatchScanExec rejects mixed scans); a plan of PLAIN
-  // partitions — every DV'd file pruned away — keeps the clean
-  // factory's vectorized answer
-  override def supportColumnarReads(p: InputPartition): Boolean = p match {
-    case _: GraftDvInputPartition | _: GraftRowModePartition => false
-    case other => clean.supportColumnarReads(other)
-  }
+  override def options: FileSourceOptions = clean.options
 
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    p match {
-      case _: GraftDvInputPartition | _: GraftRowModePartition =>
-        throw new IllegalStateException(
-          "columnar read requested for a row-mode partition")
-      case other => clean.createColumnarReader(other)
+  override def buildReader(file: PartitionedFile): PartitionReader[InternalRow] =
+    dvByBase.get(SnapshotTable.basename(file.filePath.toString)) match {
+      case Some(dv) => new GraftDvRowReader(dvSide.buildReader(file), dv)
+      case None => clean.buildReader(file)
     }
-
-  override def createReader(p: InputPartition)
-      : PartitionReader[InternalRow] = p match {
-    case GraftDvInputPartition(fp) =>
-      val file: PartitionedFile = fp.files.head
-      val base = {
-        val raw = file.filePath.toString
-        raw.substring(raw.lastIndexOf('/') + 1)
-      }
-      val dv = dvByBase.getOrElse(base,
-        throw new IllegalStateException(
-          s"no deletion vector for DV-tagged file $base"))
-      new GraftDvRowReader(dvSide.createReader(fp), dv)
-    case GraftRowModePartition(fp) => clean.createReader(fp)
-    case other => clean.createReader(other)
-  }
 }
 
-/** Drops the rows whose running position appears in the deletion
-  * vector — compressed Roaring-style bitmap membership, O(1) on the
-  * dense containers broad deletes produce. Surviving rows pass
-  * through untouched (the inner reader's row reuse contract is
-  * preserved — `get()` is only called for rows handed to the
-  * caller). */
+/** The one position filter of the DSv2 readers (snapshot scan, stream,
+  * SQL DML, change feed): counts one whole file's rows in file order
+  * and passes the rows whose position is NOT in `positions` — or, with
+  * `keepOnly`, exactly the rows whose position IS. Compressed
+  * Roaring-style bitmap membership, O(1) on the dense containers broad
+  * deletes produce. Surviving rows pass through untouched (the inner
+  * reader's row reuse contract is preserved — `get()` is only called
+  * for rows handed to the caller). */
 private[sources] final class GraftDvRowReader(
     inner: PartitionReader[InternalRow],
-    dv: graft.functions.DeleteBitmap) extends PartitionReader[InternalRow] {
+    positions: DeleteBitmap,
+    keepOnly: Boolean = false) extends PartitionReader[InternalRow] {
 
   private var pos = -1L
 
   override def next(): Boolean = {
     while (inner.next()) {
       pos += 1
-      if (!dv.contains(pos)) return true
+      if (positions.contains(pos) == keepOnly) return true
     }
     false
   }

@@ -241,11 +241,9 @@ final class GraftRowLevelScan(
     // rewrites WITHOUT its hidden rows (the replacement files then
     // carry no vector — a copy-on-write rewrite is itself the lazy
     // purge); a plain parquet batch here would resurrect them.
-    val dvByBase = replaced.filter(_.hasDeletes)
-      .map(e => e.path.substring(e.path.lastIndexOf('/') + 1)
-        -> e.deletedBitmap).toMap
     new GraftScanBuilder(spark, op.tablePath, None, index, readSchema(),
-      dataSchema, dvByBase, CaseInsensitiveStringMap.empty())
+      dataSchema, SnapshotTable.vectorsOf(replaced),
+      CaseInsensitiveStringMap.empty())
       .build().toBatch
   }
 

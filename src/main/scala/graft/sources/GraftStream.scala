@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{
   AttributeReference, EqualTo, Expression, In, Literal}
@@ -15,7 +16,7 @@ import org.apache.spark.sql.connector.read.streaming.{
   MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex
 import org.apache.spark.sql.execution.datasources.v2.parquet.{
-  ParquetScan, ParquetScanBuilder}
+  ParquetPartitionReaderFactory, ParquetScan, ParquetScanBuilder}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -36,7 +37,8 @@ private[sources] final case class GraftOffset(version: Long) extends Offset {
   * untouched — the subclass only adds the streaming entry point.
   *
   * For a snapshot carrying merge-on-read deletion vectors
-  * (`dvByBase` nonEmpty) the built scan applies them at read
+  * (`dvByBase` nonEmpty) the built scan plans each vectored file whole
+  * and packs it with the rest, applies the vectors per file at read
   * ([[GraftDvReaderFactory]]), and aggregate pushdown is REFUSED:
   * the pushed COUNT/MIN/MAX answer from parquet footers alone, which
   * count rows a deletion vector hides. */
@@ -72,7 +74,14 @@ private[sources] final class GraftScanBuilder(
   * the dim side ran, and the scan narrows its manifest listing to just
   * those partitions before any fact I/O. At cluster scale this is the
   * difference between scanning a 100 TB fact table and scanning the
-  * joined slice of it. */
+  * joined slice of it.
+  *
+  * Deletion vectors ride the inherited planning: a vectored file is
+  * unsplittable ([[isSplitable]]), so Spark packs it whole into shared
+  * partitions exactly as it packs clean files — also after a runtime
+  * filter narrows the listing, and for every micro-batch and SQL DML
+  * read planned through this scan — and the reader factory applies
+  * each file's vector with a position count of its own. */
 private[sources] final class GraftScan(
     tablePath: String,
     pinnedVersion: Option[Long],
@@ -125,57 +134,31 @@ private[sources] final class GraftScan(
     }
   }
 
-  private def dvBasename(f: org.apache.spark.sql.execution.datasources
-      .PartitionedFile): String = {
-    val raw = f.filePath.toString
-    raw.substring(raw.lastIndexOf('/') + 1)
-  }
+  /** A vectored file is never split: its position filter counts rows
+    * from the file's first ([[GraftDvReaderFactory]]). Spark's packing
+    * then plans it whole, in a partition shared with other files. */
+  override def isSplitable(path: Path): Boolean =
+    !dvByBase.contains(path.getName) && super.isSplitable(path)
 
-  /** DV-aware partition planning (see [[GraftDvInputPartition]]):
-    * every DV'd file that survives pruning becomes its own UNSPLIT
-    * single-file partition (splits merged back to the full byte
-    * range — the position filter's running count must see every row
-    * of the file, in order); clean files keep Spark's packing and
-    * splits verbatim. */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val planned = super.planInputPartitions()
-    if (dvByBase.isEmpty) return planned
-    val fps = planned.map(_.asInstanceOf[
-      org.apache.spark.sql.execution.datasources.FilePartition])
-    val dvWhole = fps.flatMap(_.files.filter(f =>
-        dvByBase.contains(dvBasename(f))))
-      .groupBy(_.filePath.toString).toSeq.sortBy(_._1)
-      .map { case (_, splits) =>
-        val f = splits.head
-        f.copy(start = 0L, length = f.fileSize)
-      }
-    // pruning removed every DV'd file: plain partitions, full
-    // vectorized path — the DV machinery costs nothing it didn't hit
-    if (dvWhole.isEmpty) return planned
-    val cleanSets = fps.map(_.files.filterNot(f =>
-      dvByBase.contains(dvBasename(f)))).filter(_.nonEmpty)
-    cleanSets.zipWithIndex.map { case (fs, i) =>
-      GraftRowModePartition(org.apache.spark.sql.execution.datasources
-        .FilePartition(i, fs)): InputPartition
-    } ++ dvWhole.zipWithIndex.map { case (f, i) =>
-      GraftDvInputPartition(
-        org.apache.spark.sql.execution.datasources.FilePartition(
-          cleanSets.length + i, Array(f))): InputPartition
-    }
-  }
-
-  /** For DV'd snapshots: the normal factory serves clean partitions
-    * (row-based — see [[GraftDvReaderFactory]] — but with pushed
-    * filters intact), and a twin with EMPTY pushed filters serves the
-    * DV partitions, so parquet row-group/page skipping can never
-    * renumber the position filter's running count. */
+  /** For a scan whose planned file set holds a vectored file: the
+    * normal factory serves clean files (row-based — see
+    * [[GraftDvReaderFactory]] — but with pushed filters intact), and a
+    * twin with EMPTY pushed filters serves vectored files, so parquet
+    * row-group/page skipping can never renumber the position filter's
+    * running count. Otherwise the plain factory, columnar path and
+    * all. The listing is the one the inherited partition planning
+    * packs, so the factory and the partitions see the same files. */
   override def createReaderFactory(): PartitionReaderFactory = {
     val clean = super.createReaderFactory()
-    if (dvByBase.isEmpty) return clean
+    val plansVectored = dvByBase.nonEmpty &&
+      fileIndex.listFiles(partitionFilters, dataFilters)
+        .exists(_.files.exists(f => dvByBase.contains(f.getPath.getName)))
+    if (!plansVectored) return clean
     require(pushedAggregate.isEmpty,
       "aggregate pushdown must be refused for a DV'd snapshot")
     val dvSide = copy(pushedFilters = Array.empty).createReaderFactory()
-    new GraftDvReaderFactory(clean, dvSide, dvByBase)
+    new GraftDvReaderFactory(clean.asInstanceOf[ParquetPartitionReaderFactory],
+      dvSide.asInstanceOf[ParquetPartitionReaderFactory], dvByBase)
   }
 
   override def toMicroBatchStream(
@@ -472,8 +455,7 @@ private[sources] final class GraftMicroBatchStream(
     // for a file a commit just added (new files carry no vector; its
     // rows are the commit's new images, and a LATER vector hides
     // nothing already delivered — this feed is images, not deletes)
-    val dvs = delta.filter(_.hasDeletes).map(e =>
-      e.path.substring(e.path.lastIndexOf('/') + 1) -> e.deletedBitmap).toMap
+    val dvs = SnapshotTable.vectorsOf(delta)
     // same pruned columns, pushed filters and options as the batch
     // scan — only the file set differs
     val scan = template.copy(fileIndex = idx)

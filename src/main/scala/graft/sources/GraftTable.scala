@@ -308,8 +308,7 @@ final class GraftTable(
           .collect().iterator.map(SnapshotTable.entryOfCkptRow).toSeq
       case None => entries.filter(_.hasDeletes)
     }
-    dvd.map(e => e.path.substring(e.path.lastIndexOf('/') + 1)
-      -> e.deletedBitmap).toMap
+    SnapshotTable.vectorsOf(dvd)
   }
 
   /** Batch plans are exactly Spark's parquet scans; the graft subclass

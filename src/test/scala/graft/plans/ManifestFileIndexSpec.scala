@@ -36,6 +36,34 @@ class ManifestFileIndexSpec extends SparkSpec {
     scans.head
   }
 
+  /** Strip the `file:meta` stats (recorded lengths) from every commit
+    * record of the table at `path` — manifests and deltas' `add` lines —
+    * simulating a table written before lengths were recorded. */
+  private def stripLengths(path: String): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def strip(fields: Seq[String]): Seq[String] = fields match {
+      case "add" +: rest => "add" +: strip(rest)
+      case head +: rest =>
+        head +: rest.grouped(3).filterNot(_.headOption.contains("file:meta"))
+          .flatten.toSeq
+      case other => other
+    }
+    fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/_commits"))
+      .map(_.getPath).filter(p => p.getName.endsWith(".manifest") ||
+        p.getName.endsWith(".delta"))
+      .foreach { mf =>
+        val txt = new String(
+          org.apache.commons.io.IOUtils.toByteArray(fs.open(mf)), "UTF-8")
+        val stripped = txt.linesIterator
+          .map(line => strip(line.split("\t", -1).toSeq).mkString("\t"))
+          .mkString("\n") + "\n"
+        fs.delete(mf, false)
+        val out = fs.create(mf, true)
+        out.write(stripped.getBytes("UTF-8")); out.close()
+      }
+  }
+
   test("declared-schema read plans through ManifestFileIndex; parity with legacy") {
     val path = tmp("mfi")
     val t = SnapshotTable(spark, path, "id", Some("part"),
@@ -79,22 +107,7 @@ class ManifestFileIndexSpec extends SparkSpec {
     val t = SnapshotTable(spark, path, "id", Some("part"),
       declaredSchema = Some(schema))
     t.create(frame((1, "a", "p1"), (2, "b", "p2")))
-    // strip the file:meta stats from the manifest, simulating a table
-    // written before lengths were recorded
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mf = new org.apache.hadoop.fs.Path(s"$path/_commits/v000000001.manifest")
-    val txt = new String(org.apache.commons.io.IOUtils.toByteArray(fs.open(mf)), "UTF-8")
-    val stripped = txt.linesIterator.map { line =>
-      line.split("\t", -1).toSeq match {
-        case head +: rest =>
-          (head +: rest.grouped(3).filterNot(_.headOption.contains("file:meta"))
-            .flatten.toSeq).mkString("\t")
-      }
-    }.mkString("\n") + "\n"
-    fs.delete(mf, false)
-    val out = fs.create(mf, true)
-    out.write(stripped.getBytes("UTF-8")); out.close()
+    stripLengths(path)
 
     // a FRESH handle: the writing handle serves its own committed state
     // from cache (by design); a legacy table is met by a new reader
@@ -104,6 +117,29 @@ class ManifestFileIndexSpec extends SparkSpec {
       "read without recorded lengths must not trust the manifest index")
     assert(df.orderBy("id").select("val").as[String].collect().toSeq ==
       Seq("a", "b"))
+  }
+
+  test("a vectored snapshot read through the listing path equals the manifest-index read") {
+    val path = tmp("mfidv")
+    val t = SnapshotTable(spark, path, "id", Some("part"),
+      declaredSchema = Some(schema))
+    t.create(frame((1 to 40).map(i =>
+      (i, s"v$i", if (i % 2 == 0) "p1" else "p2")): _*))
+    t.deleteMoR(col("id") % 5 === 0)
+    val indexed = t.read
+    assert(scanOf(indexed).relation.location.isInstanceOf[ManifestFileIndex])
+    stripLengths(path)
+    // a FRESH handle meets the stripped log and must take the listing path
+    val listed = SnapshotTable(spark, path, "id", Some("part"),
+      declaredSchema = Some(schema)).read
+    val scan = scanOf(listed)
+    assert(!scan.relation.location.isInstanceOf[ManifestFileIndex],
+      "read without recorded lengths must not trust the manifest index")
+    assert(scan.relation.fileFormat.isInstanceOf[DvParquetFileFormat],
+      "the listed read does not apply vectors inside the reader")
+    assert(listed.orderBy("id").collect().toSeq ==
+      indexed.orderBy("id").collect().toSeq)
+    assert(listed.count() == 32)
   }
 
   test("plain read.filter skips files automatically from manifest stats") {

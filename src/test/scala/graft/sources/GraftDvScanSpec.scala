@@ -2,6 +2,13 @@ package graft.sources
 
 import java.nio.file.Files
 
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{
+  AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
@@ -10,10 +17,11 @@ import graft.plans.SnapshotTable
 /** Merge-on-read deletion vectors applied INSIDE the DSv2 scan
   * ([[GraftDvReaderFactory]]): `format("graft")`, the SQL catalog and
   * SQL DML all serve a DV'd snapshot directly — deleted rows hidden,
-  * no purge/compact step — while the position-filter's structural
-  * invariants (whole-file unsplit partitions, no pushed filters on
-  * the DV side, no footer-only aggregate pushdown) hold in the
-  * planned physical scan, not just in the results. */
+  * no purge/compact step — while the position filter's structural
+  * invariants (every vectored file planned whole, packed into shared
+  * partitions with other files, no pushed filters on the vectored
+  * side, no footer-only aggregate pushdown) hold in the planned
+  * physical scan, not just in the results. */
 class GraftDvScanSpec extends SparkSpec {
 
   import spark.implicits._
@@ -47,23 +55,118 @@ class GraftDvScanSpec extends SparkSpec {
       t.read.select("id", "v", "part").orderBy("id").collect().toSeq)
   }
 
-  test("DV'd files plan as single whole-file row-based partitions") {
-    val (path, _) = dvTable("dvplan")
-    val df = spark.read.format("graft").load(path)
-      .filter($"v" > 100) // pushed filter must not reach the DV side
-    val scan = df.queryExecution.executedPlan.collectFirst {
-      case b: BatchScanExec => b
-    }.getOrElse(fail("no BatchScanExec in the plan"))
-    assert(!scan.supportsColumnar, "DV'd snapshot must read row-based")
-    val parts = scan.inputPartitions
-    val dvParts = parts.collect { case p: GraftDvInputPartition => p }
-    assert(dvParts.nonEmpty, "no DV partitions planned")
-    dvParts.foreach { p =>
-      assert(p.fp.files.length == 1, "DV partition spans multiple files")
-      val f = p.fp.files.head
-      assert(f.start == 0 && f.length == f.fileSize,
-        "DV file read as a split, not whole — positions would renumber")
+  /** Every BatchScanExec over a graft table in an (executed, possibly
+    * adaptive) plan. */
+  private def graftScans(df: DataFrame): Seq[BatchScanExec] = {
+    def walk(p: SparkPlan): Seq[BatchScanExec] = (p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case b: BatchScanExec if b.toString.contains("graft") => Seq(b)
+      case _ => Nil
+    }) ++ p.children.flatMap(walk)
+    walk(df.queryExecution.executedPlan)
+  }
+
+  /** Asserts every vectored file of `t` among `parts` is planned once
+    * and whole; returns, per partition, how many vectored files it holds. */
+  private def vectoredPerPartition(t: SnapshotTable,
+                                   parts: Seq[FilePartition]): Seq[Int] = {
+    val vectored = t.candidateFiles().filter(_.hasDeletes)
+      .map(e => SnapshotTable.basename(e.path)).toSet
+    val files = parts.flatMap(_.files)
+    val hits = files.filter(f => vectored(f.toPath.getName))
+    assert(hits.map(_.toPath.getName).distinct.size == hits.size,
+      "a vectored file was planned in more than one piece")
+    hits.foreach(f => assert(f.start == 0 && f.length == f.fileSize,
+      s"vectored ${f.toPath.getName} read as a split — positions would renumber"))
+    parts.map(_.files.count(f => vectored(f.toPath.getName)))
+  }
+
+  test("vectored files plan whole, pack together, and read exact under a pushed filter") {
+    val path = tmp("dvpack")
+    val t = SnapshotTable(spark, path, "id", partitionCol = Some("part"),
+      clusterBy = Seq("id"), clusterFiles = 1)
+    val confs = Seq(
+      // several row groups per file: a pushed range filter reaching the
+      // vectored side would skip groups and renumber the rows after them
+      "parquet.block.size" -> "16384",
+      // splits small enough that the big file WOULD split if allowed,
+      // open cost small enough that the small files share a partition
+      "spark.sql.files.maxPartitionBytes" -> "131072",
+      "spark.sql.files.openCostInBytes" -> "1024")
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      // one big partition of sorted ids plus five small ones, every
+      // file vectored by a scattered delete
+      t.create(spark.range(0, 40000).select($"id", ($"id" * 3).as("v"),
+        when($"id" < 30000, lit("big"))
+          .otherwise(concat(lit("s"), ($"id" / 2000).cast("int"))).as("part")))
+      t.deleteMoR(col("id") % 10 === 2)
+      assert(t.candidateFiles().forall(_.hasDeletes), "a file carries no vector")
+
+      val df = spark.read.format("graft").load(path)
+        .filter($"id" >= 5000 && $"id" < 35000)
+      val got = df.select("id").collect().map(_.getLong(0)).sorted.toSeq
+      assert(got == (5000L until 35000L).filterNot(_ % 10 == 2))
+
+      val scan = graftScans(df).headOption
+        .getOrElse(fail("no graft BatchScanExec in the plan"))
+      assert(!scan.supportsColumnar, "vectored snapshot must read row-based")
+      assert(scan.scan.asInstanceOf[GraftScan].pushedFilters.nonEmpty,
+        "the range filter was not pushed, so the spec proves nothing")
+      val parts = scan.inputPartitions.map(_.asInstanceOf[FilePartition])
+      val big = parts.flatMap(_.files).find(_.toPath.getParent.getName == "part=big")
+        .getOrElse(fail("the big partition's file was not planned"))
+      val footer = ParquetFileReader.open(HadoopInputFile.fromPath(
+        big.toPath, spark.sparkContext.hadoopConfiguration))
+      try assert(footer.getRowGroups.size > 1, "the big file has one row group")
+      finally footer.close()
+      assert(big.fileSize > 131072, "the big file is too small to split")
+      assert(vectoredPerPartition(t, parts).max >= 2,
+        s"no partition packs two vectored files: ${parts.map(_.files.length)}")
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  test("a runtime filter narrows a vectored fact scan; re-planned files stay whole") {
+    val root = Files.createTempDirectory("graft_dvdpp").toString
+    val fact = SnapshotTable(spark, s"$root/fact", "id",
+      partitionCol = Some("d"))
+    fact.create(spark.range(1000).select($"id",
+      ($"id" % 20).cast("string").as("d"), ($"id" * 2).as("x")))
+    fact.deleteMoR(col("id") % 7 === 3)
+    assert(fact.candidateFiles().count(_.hasDeletes) >= 10)
+    spark.range(3).select($"id".cast("string").as("d"), lit("yes").as("flag"))
+      .write.parquet(s"$root/dim")
+    val dim = spark.read.parquet(s"$root/dim").filter($"flag" === "yes")
+
+    val j = spark.read.format("graft").load(s"$root/fact")
+      .join(dim, Seq("d")).select("id", "d", "x")
+    val rows = j.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+      .sortBy(_._1).toSeq
+    assert(j.queryExecution.executedPlan.toString
+      .contains("dynamicpruningexpression"),
+      s"no runtime filter reached the graft scan:\n${j.queryExecution.executedPlan}")
+    // the API read through the same vectors agrees, and no hidden row shows
+    val api = fact.read.join(dim, Seq("d")).select("id", "d", "x").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sortBy(_._1).toSeq
+    assert(rows == api)
+    assert(rows.map(_._1) == (0L until 1000L).filter(i =>
+      i % 20 < 3 && i % 7 != 3))
+
+    // the scan's listing is now narrowed to the 3 joined partitions; a
+    // re-plan packs exactly their files, every vectored one whole
+    val scan = graftScans(j).headOption.getOrElse(fail("no graft scan"))
+    val parts = scan.batch.planInputPartitions()
+      .map(_.asInstanceOf[FilePartition]).toSeq
+    val dirs = parts.flatMap(_.files).map(_.toPath.getParent.getName).toSet
+    assert(dirs == Set("d=0", "d=1", "d=2"), s"runtime narrowing missed: $dirs")
+    assert(vectoredPerPartition(fact, parts).sum ==
+      fact.candidateFiles().count(e => e.hasDeletes &&
+        Set("d=0", "d=1", "d=2").exists(d => e.path.startsWith(d + "/"))))
   }
 
   test("versionAsOf: pre-delete version shows all rows, head hides them") {
