@@ -18,6 +18,19 @@ import org.apache.spark.sql.types._
 final case class ValidationResult(valid: DataFrame, rejected: DataFrame,
                                   base: Option[DataFrame] = None) {
   def unpersist(): Unit = base.foreach(_.unpersist())
+
+  /** (rows read, rows valid). Cached: ONE aggregate over the base — the
+    * job that fills the cache also answers both counts. Uncached: a
+    * count of each side. */
+  def counts(): (Long, Long) = base match {
+    case Some(b) =>
+      val r = b.agg(count(lit(1)),
+        count(when(col(Validation.ReasonCol).isNull, 1))).head()
+      (r.getLong(0), r.getLong(1))
+    case None =>
+      val v = valid.count()
+      (v + rejected.count(), v)
+  }
 }
 
 /** The reference's signature composite operator (SURVEY.md §2.12),

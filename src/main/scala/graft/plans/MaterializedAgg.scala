@@ -697,8 +697,10 @@ object MaterializedAgg {
       commitMerged(view, keys, aggs.map(_._1),
         // deleted groups surface with NULL key/measure columns (KeyCol,
         // the preserved left side, is never null); the delete path only
-        // needs KeyCol, and conformToSchema casts the nulls
-        out, toV, additive = false, extraProps = extraProps)
+        // needs KeyCol, and conformToSchema casts the nulls. One row per
+        // dirty key by construction: the count is already known
+        out, toV, additive = false, extraProps = extraProps,
+        knownGroups = Some(nDirty))
     } finally dirty.unpersist()
   }
 
@@ -963,11 +965,16 @@ object MaterializedAgg {
   /** Merge refresh output into the view in ONE commit: upsert live
     * groups, delete emptied ones, stage the watermark. For the
     * additive path the incoming measures are DELTAS to fold onto the
-    * current group values; for recompute they are final values. */
+    * current group values; for recompute they are final values.
+    * `knownGroups`: the caller's exact row count of `incoming0`, when
+    * it has one (the dirty-group recompute emits one row per dirty
+    * key) — the count job is then skipped and the first consumer
+    * fills the cache. */
   private[graft] def commitMerged(view: SnapshotTable, keys: Seq[String],
                            measures: Seq[String], incoming0: DataFrame,
                            toV: Long, additive: Boolean,
-                           extraProps: Map[String, String] = Map.empty)
+                           extraProps: Map[String, String] = Map.empty,
+                           knownGroups: Option[Long] = None)
       : Unit = {
     // the delta is consumed at least twice (the emptiness probe plus
     // the merge — an aggregate plan re-executes in full under
@@ -977,7 +984,7 @@ object MaterializedAgg {
     try {
       // one count fills the cache, probes emptiness AND sizes the
       // broadcast decision below
-      val nGroups = incoming.count()
+      val nGroups = knownGroups.getOrElse(incoming.count())
       // NO group changed (rewrite-only source churn — compaction,
       // clustering): advance the watermark as a METADATA-ONLY commit
       if (view.exists && nGroups == 0L) {

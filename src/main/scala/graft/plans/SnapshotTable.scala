@@ -1046,9 +1046,18 @@ final class SnapshotTable(
     * a fresh commit id so basePath partition parsing spans commits. */
   private def writeDataFiles(df: DataFrame,
                              packFiles: Option[Int] = None,
-                             dirHint: Option[Int] = None): Seq[FileEntry] = {
+                             dirHint: Option[Int] = None): Seq[FileEntry] =
+    promoteStage(stageWrite(df, packFiles, dirHint),
+      Some(StructType(df.schema.fields.map(_.copy(nullable = true)))))
+
+  /** Write `df` under the table's layout into a fresh commit-private
+    * staging dir and return its commit id; [[promoteStage]] (or the
+    * stage-first merge, [[mergeStaged]]) takes it from there. */
+  private def stageWrite(df: DataFrame,
+                         packFiles: Option[Int] = None,
+                         dirHint: Option[Int] = None): String = {
     val commitId = UUID.randomUUID().toString.take(8)
-    val stage = s"$path/_stage/$commitId"
+    val stage = stageDirFor(commitId)
     val lay = effectiveLayout
     val clustered =
       if (lay.clusterBy.nonEmpty) {
@@ -1099,42 +1108,30 @@ final class SnapshotTable(
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
     timed("write-stage")((if (tablePartitionCols.isEmpty) w
       else w.partitionBy(tablePartitionCols: _*)).parquet(stage))
-    promoteStage(commitId,
-      Some(StructType(df.schema.fields.map(_.copy(nullable = true)))))
+    commitId
   }
 
-  /** Move a fully-written staging tree into the canonical data dir and
-    * index it: walk, per-file rename, footer stats, blooms. Shared by
-    * [[writeDataFiles]] (the engine's own spark-write staging) and the
-    * DSv2 row-level writer (whose tasks stage files directly). */
-  private def promoteStage(commitId: String,
-                           bloomSchema: Option[StructType],
-                           only: Option[Set[String]] = None): Seq[FileEntry] = {
-    val stage = s"$path/_stage/$commitId"
-    // per-commit counter makes every BASENAME globally unique: Spark's
-    // dynamic-partition writer can emit the same task file name into
-    // two partition dirs (per-dir counter, same task UUID), and
-    // fileBlooms matches input_file_name back to manifest entries by
-    // basename — a collision there would attach the wrong bloom.
-    // The walk only LISTS (sequential, one RPC per dir); the per-file
-    // mkdirs+rename moves then run concurrently.
-    // (src, destRel, len, mtime) — length and mtime are captured from
-    // the walk's own listing, so the manifest records a complete scan
-    // plan with no extra filesystem calls. NOTE: mtimes are STAGE-TIME
-    // approximations — exact where rename preserves them (POSIX, HDFS),
-    // drifting on copy-based-rename stores (S3A). They exist only to
-    // populate FileStatus for scan planning; nothing may use them for
-    // freshness logic (commit times live on the MANIFEST files).
-    // `_tmp-*` subtrees are task-attempt-PRIVATE: a hard-killed
-    // executor (no abort hook) leaves its partial files there, and
-    // promoting one would commit a truncated parquet. Only files a
-    // task attempt COMMITTED (moved out of its _tmp dir) may promote.
-    // `only` narrows further to an explicit stage-relative file set —
-    // the streaming sink's replayed epochs re-use a deterministic
-    // stage dir, so a crashed prior attempt's committed leftovers may
-    // be lying beside the re-run's files and must not ride along.
-    val toMove = mutable.Buffer.empty[(Path, String, Long, Long)]
-    var fileNo = -1
+  /** The task-COMMITTED parquet files of a staging tree as (file,
+    * stage-relative path, length, mtime). `_tmp-*` subtrees are
+    * task-attempt-PRIVATE: a hard-killed executor (no abort hook)
+    * leaves its partial files there, and promoting one would commit a
+    * truncated parquet. Only files a task attempt COMMITTED (moved out
+    * of its _tmp dir) count. `only` narrows further to an explicit
+    * stage-relative file set — the streaming sink's replayed epochs
+    * re-use a deterministic stage dir, so a crashed prior attempt's
+    * committed leftovers may be lying beside the re-run's files and
+    * must not ride along. The walk only LISTS (one RPC per dir);
+    * length and mtime come from that listing, so the manifest records
+    * a complete scan plan with no extra filesystem calls. NOTE: mtimes
+    * are STAGE-TIME approximations — exact where rename preserves them
+    * (POSIX, HDFS), drifting on copy-based-rename stores (S3A). They
+    * exist only to populate FileStatus for scan planning; nothing may
+    * use them for freshness logic (commit times live on the MANIFEST
+    * files). */
+  private def walkStage(commitId: String, only: Option[Set[String]])
+      : Seq[(Path, String, Long, Long)] = {
+    val stage = new Path(stageDirFor(commitId))
+    val out = mutable.Buffer.empty[(Path, String, Long, Long)]
     def walk(p: Path, rel: String): Unit =
       fs.listStatus(p).foreach { st =>
         val name = st.getPath.getName
@@ -1142,42 +1139,68 @@ final class SnapshotTable(
         if (st.isDirectory) {
           if (!name.startsWith("_tmp-")) walk(st.getPath, childRel)
         } else if (name.endsWith(".parquet") &&
-            only.forall(_.contains(childRel))) {
-          fileNo += 1
-          toMove += ((st.getPath,
-            (if (rel.isEmpty) "" else s"$rel/") + s"$commitId-$fileNo-$name",
-            st.getLen, st.getModificationTime))
-        }
+            only.forall(_.contains(childRel)))
+          out += ((st.getPath, childRel, st.getLen, st.getModificationTime))
       }
     // a rewrite can legitimately stage nothing (e.g. a row-level delete
-    // of every scanned row): no stage dir, no new files
-    if (fs.exists(new Path(stage))) timed("walk")(walk(new Path(stage), ""))
-    // ONE footer read per staged file, pre-move, serving two needs:
-    // (1) drop ZERO-ROW part files before they enter the manifest —
-    // Spark's range/hash writers nondeterministically emit empty parts
-    // for empty or skewed inputs, and an empty file is worse than
-    // useless in a manifest: it has NO column stats, so every
-    // stats-scoped merge conservatively treats it as touched forever
-    // (no size gate: a very wide schema can push even an empty
-    // footer past any fixed byte bound); (2) the per-file min/max
-    // stats for the layout's statsCols, formerly a second footer open
-    // after the move.
+    // of every scanned row): no stage dir, no files
+    if (fs.exists(stage)) timed("walk")(walk(stage, ""))
+    out.toSeq
+  }
+
+  /** The staged files ([[walkStage]]) with ONE footer read each: the
+    * entry, under its stage-relative path, carries the file's row
+    * count, length, mtime, the layout's min/max stats and the per-column
+    * null counts — everything the manifest records, and everything the
+    * stage-first merge decides its scope from. ZERO-ROW part files are
+    * dropped here: Spark's range/hash writers nondeterministically emit
+    * empty parts for empty or skewed inputs, and an empty file is worse
+    * than useless in a manifest — it has NO column stats, so every
+    * stats-scoped merge would conservatively treat it as touched
+    * forever (no size gate: a very wide schema can push even an empty
+    * footer past any fixed byte bound). */
+  private def probeStage(commitId: String, only: Option[Set[String]])
+      : Seq[(Path, FileEntry)] = {
     val statCols = effectiveLayout.statsCols
-    val probed = timed("footer-stats")(inParallel(toMove.toSeq) {
-      case (src, rel, _, _) => rel -> footerProbe(src, statCols)
-    }).toMap
-    val moving = toMove.toSeq.filter(m => probed(m._2)._1 > 0L)
-    timed("moves")(inParallel(moving) { case (src, destRel, _, _) =>
-      val dest = new Path(s"$dataDir/$destRel")
+    timed("footer-stats")(inParallel(walkStage(commitId, only)) {
+      case (src, rel, len, mtime) =>
+        val (rows, stats) = footerProbe(src, statCols)
+        (src, FileEntry(rel,
+          stats + FileEntry.metaStat(len, mtime) + FileEntry.rowsStat(rows)))
+    }).filter(_._2.rows > 0L)
+  }
+
+  /** Move a fully-written staging tree into the canonical data dir and
+    * index it: walk, footer stats, per-file rename, blooms. Shared by
+    * [[writeDataFiles]] (the engine's own spark-write staging) and the
+    * DSv2 writers (whose tasks stage files directly). */
+  private def promoteStage(commitId: String,
+                           bloomSchema: Option[StructType],
+                           only: Option[Set[String]] = None): Seq[FileEntry] =
+    promoteProbed(commitId, probeStage(commitId, only), bloomSchema)
+
+  /** [[promoteStage]] over an already-probed stage. A per-commit
+    * counter makes every BASENAME globally unique: Spark's
+    * dynamic-partition writer can emit the same task file name into
+    * two partition dirs (per-dir counter, same task UUID), and
+    * fileBlooms matches input_file_name back to manifest entries by
+    * basename — a collision there would attach the wrong bloom. The
+    * per-file mkdirs+rename moves run concurrently. */
+  private def promoteProbed(commitId: String, staged: Seq[(Path, FileEntry)],
+                            bloomSchema: Option[StructType]): Seq[FileEntry] = {
+    val moving = staged.zipWithIndex.map { case ((src, e), i) =>
+      val cut = e.path.lastIndexOf('/') + 1
+      (src, e.copy(path =
+        s"${e.path.take(cut)}$commitId-$i-${e.path.drop(cut)}"))
+    }
+    timed("moves")(inParallel(moving) { case (src, e) =>
+      val dest = new Path(s"$dataDir/${e.path}")
       fs.mkdirs(dest.getParent)
       if (!fs.rename(src, dest))
         throw new IllegalStateException(s"data move failed: $dest")
     })
-    timed("stage-delete")(fs.delete(new Path(s"$path/_stage/$commitId"), true))
-    val entries = moving.map { case (_, rel, len, mtime) =>
-      FileEntry(rel, probed(rel)._2 + FileEntry.metaStat(len, mtime)
-        + FileEntry.rowsStat(probed(rel)._1))
-    }
+    timed("stage-delete")(fs.delete(new Path(stageDirFor(commitId)), true))
+    val entries = moving.map(_._2)
     val blooms = fileBlooms(entries, bloomSchema)
     entries.map(e => e.copy(stats = e.stats ++ blooms.getOrElse(e.path, Map.empty)))
   }
@@ -1293,20 +1316,18 @@ final class SnapshotTable(
   /** MERGE-mode streaming epoch: the staged batch upserts by this
     * handle's primaryKey in ONE commit that also logs the epoch
     * high-water mark, with the same replay detection as the append
-    * sink, and the same plan rule as [[upsert]] ([[mergeOnRead]]):
-    *  - MERGE-ON-READ (a partitioned table whose touched partitions
-    *    hold more live rows than the staged batch — counted from the
-    *    staged files' footers; the touched set is the staged partition
-    *    dirs): the staged files are PROMOTED as they are, like the
-    *    append sink's (re-written with field ids on id-mapped tables),
-    *    and the rows they replace are hidden by deletion vectors — the
-    *    batch is never read back or rewritten;
-    *  - otherwise the staged parquet is read back (schema from the
-    *    write, dirs as partition values) and fed through [[upsert]]'s
-    *    own path.
-    * Either way merge semantics cannot diverge between the batch API
-    * and the streaming sink: same scope, same PK→partition contract,
-    * and the staged writer already enforced the CHECK constraints. */
+    * sink. On a scoped table (partitioned, or clustered with stats)
+    * the epoch commits through [[upsert]]'s own stage-first merge
+    * ([[mergeStaged]]) straight from the task-staged files: the plan
+    * rule's inputs come from their footers and partition dirs, the
+    * merge-on-read side promotes them (re-written with field ids on
+    * id-mapped tables) and the copy-on-write side reads them back as
+    * its source. An unscoped table or a `mergeSchema` epoch reads the
+    * staged parquet back (schema from the write, dirs as partition
+    * values) and feeds it through [[upsert]]. Either way merge
+    * semantics cannot diverge between the batch API and the streaming
+    * sink: same scope, same PK→partition contract, and the staged
+    * writer already enforced the CHECK constraints. */
   private[graft] def commitStagedStreamUpsert(commitId: String,
                                               schema: StructType,
                                               streamKey: String,
@@ -1318,11 +1339,17 @@ final class SnapshotTable(
       currentVersion.flatMap(readManifest(_).props.get(streamKey))
         .exists(_.toLong >= epochId)
     if (epochDone) { abortStaged(commitId); return false }
-    val stage = s"$path/_stage/$commitId"
+    val stage = stageDirFor(commitId)
     pendingProps(streamKey) = epochId.toString
     try {
-      if (!evolve && stagedMergeOnRead(commitId, schema, stagedFiles))
-        return true
+      currentVersion match {
+        case Some(v) if !evolve && mergeScoped =>
+          val m = readManifest(v)
+          mergeStaged(v, m, commitId, Some(stagedFiles),
+            m.schema.getOrElse(schema), external = true)
+          return true
+        case _ => ()
+      }
       val batch =
         if (stagedFiles.isEmpty)
           spark.createDataFrame(
@@ -1354,59 +1381,6 @@ final class SnapshotTable(
     } finally fs.delete(new Path(stage), true)
   }
 
-  /** The merge sink's merge-on-read side: commit the staged epoch by
-    * promotion plus deletion vectors when [[mergeOnRead]] picks it,
-    * returning whether it did. Decided from metadata alone — staged
-    * footers for the batch count, staged partition dirs for the
-    * touched set — on a partitioned head whose files all share the
-    * current spec (a legacy vintage needs the batch rendered under its
-    * own spec, which only the read-back path does). */
-  private def stagedMergeOnRead(commitId: String, schema: StructType,
-                                stagedFiles: Set[String]): Boolean = {
-    val pcs = tablePartitionCols
-    val v = currentVersion.getOrElse(return false)
-    val m = readManifest(v)
-    if (pcs.isEmpty || stagedFiles.isEmpty ||
-        !m.entries.forall(e => SnapshotTable.specOf(e.path) == pcs))
-      return false
-    val touched = stagedFiles.map(partOf)
-    val scope: FileEntry => Boolean = e => touched(partOf(e.path))
-    val (touchedFiles, keptFiles) = m.entries.partition(scope)
-    val staged = stagedParquet(commitId, Some(stagedFiles))
-    val batchRows = inParallel(staged)(p =>
-      footerProbe(new Path(p), Nil)._1).sum
-    if (!mergeOnRead(touchedFiles, Some(batchRows))) return false
-    val fresh =
-      if (headIdMapped) rewriteStagedWithIds(commitId, schema, Some(stagedFiles))
-      else promoteStage(commitId,
-        Some(StructType(schema.fields.map(_.copy(nullable = true)))),
-        only = Some(stagedFiles))
-    val tableSchema = m.schema.getOrElse(schema)
-    commitMergeOnRead(v, m, touchedFiles, keptFiles, fresh,
-      readFilesRaw(fresh, Some(tableSchema)), tableSchema, scope)
-    true
-  }
-
-  /** The task-COMMITTED parquet files of a staging tree (same rules as
-    * [[promoteStage]]'s walk: `_tmp-*` attempt dirs excluded, `only`
-    * narrows to an explicit reported set), as absolute paths. */
-  private def stagedParquet(commitId: String,
-                            only: Option[Set[String]]): Seq[String] = {
-    val stage = s"$path/_stage/$commitId"
-    val out = mutable.Buffer.empty[String]
-    def walk(p: Path, rel: String): Unit =
-      fs.listStatus(p).foreach { st =>
-        val name = st.getPath.getName
-        val childRel = if (rel.isEmpty) name else s"$rel/$name"
-        if (st.isDirectory) {
-          if (!name.startsWith("_tmp-")) walk(st.getPath, childRel)
-        } else if (name.endsWith(".parquet") &&
-            only.forall(_.contains(childRel))) out += st.getPath.toString
-      }
-    if (fs.exists(new Path(stage))) walk(new Path(stage), "")
-    out.toSeq
-  }
-
   /** ID-MAPPED alternative to [[promoteStage]]: external (DSv2) task
     * writers emit the query schema verbatim, so their staged files
     * carry no parquet field ids — promoting one into an id-mapped
@@ -1419,21 +1393,25 @@ final class SnapshotTable(
   private def rewriteStagedWithIds(commitId: String, schema: StructType,
                                    only: Option[Set[String]])
       : Seq[FileEntry] = {
-    val stage = s"$path/_stage/$commitId"
-    val paths = stagedParquet(commitId, only)
+    val stage = stageDirFor(commitId)
+    val paths = walkStage(commitId, only).map(_._1.toString)
     val out =
       if (paths.isEmpty) Nil
       else {
-        val noIds = StructType(schema.fields.map(f => f.copy(
-          nullable = true,
-          metadata = SnapshotTable.mdWithoutId(f.metadata))))
-        val batch = spark.read.option("basePath", stage).schema(noIds)
-          .parquet(paths: _*)
+        val batch = spark.read.option("basePath", stage)
+          .schema(withoutIds(schema)).parquet(paths: _*)
         writeDataFiles(stampFieldIds(batch))
       }
     fs.delete(new Path(stage), true)
     out
   }
+
+  /** `schema` relaxed to nullable with every parquet field id
+    * stripped: how a staged batch is read back — by NAME, which is how
+    * any stager laid its files out. */
+  private def withoutIds(schema: StructType): StructType =
+    StructType(schema.fields.map(f => f.copy(nullable = true,
+      metadata = SnapshotTable.mdWithoutId(f.metadata))))
 
   /** Head logged schema is fully id-mapped (staged promotions must
     * re-write, see [[rewriteStagedWithIds]]). */
@@ -2384,18 +2362,25 @@ final class SnapshotTable(
   /** MERGE-by-PK upsert as ONE atomic commit. Untouched partitions
     * (cluster ranges, on clustered layouts) carry over BY REFERENCE
     * (their existing files are listed unchanged in the new manifest —
-    * zero data I/O). The touched files take one of two physical plans,
-    * picked per commit from metadata the merge already has (see
-    * [[mergeOnRead]]):
-    *  - COPY-ON-WRITE: touched files are merged and rewritten as new
-    *    files — when the batch is about as large as what it touches;
-    *  - MERGE-ON-READ: only the batch is written; the rows it replaces
-    *    are hidden by deletion vectors on the touched files (the
-    *    [[deleteMoR]] representation) — when the touched files hold
-    *    more live rows than the batch, so a small batch never pays a
-    *    rewrite of the slice it lands in.
-    * Both plans commit the same rows; readers see the old snapshot
-    * until the manifest rename, then the new one, never a mix.
+    * zero data I/O). On a SCOPED table — partitioned, or clustered with
+    * statted cluster columns — the merge is stage-first
+    * ([[mergeStaged]]): the batch is written once, and the merge scope
+    * and the plan rule's batch count come from the staged files'
+    * footers and partition dirs, so no job evaluates the batch just to
+    * scope it. The touched files then take one of two physical plans,
+    * picked per commit (see [[mergeOnRead]]):
+    *  - COPY-ON-WRITE: touched files are merged with the staged batch
+    *    (read back) and rewritten as new files — when the batch is
+    *    about as large as what it touches;
+    *  - MERGE-ON-READ: the staged batch is promoted as it is and the
+    *    rows it replaces are hidden by deletion vectors on the touched
+    *    files (the [[deleteMoR]] representation) — when the touched
+    *    files hold more live rows than the batch, so a small batch
+    *    never pays a rewrite of the slice it lands in.
+    * An unscoped table has nothing to prune by: every live file is
+    * touched and rewritten with the batch, copy-on-write. Both plans
+    * commit the same rows; readers see the old snapshot until the
+    * manifest rename, then the new one, never a mix.
     *
     * @param evolveSchema allow the source to carry NEW columns: kept
     *   rows read them as null (mergeSchema), mirroring
@@ -2414,7 +2399,10 @@ final class SnapshotTable(
     * groups + drop emptied groups, atomically), and deletes
     * participate in the merge SCOPE, so touched-partition / cluster
     * pruning and the optimistic re-base treat them like any other
-    * keyed write, and they count toward the batch size of
+    * keyed write. It is not stage-first: its deletes are never
+    * written, so on a scoped table ONE aggregate over every source row
+    * (inserts and deletes) gives the batch count and the scope before
+    * the write, and deletes count toward the batch size of
     * [[upsert]]'s plan rule (a merge-on-read delete hides its match
     * with a deletion vector). A delete for an absent PK is a no-op. */
   def upsertDelete(source: DataFrame, deleteFlag: String): Unit = {
@@ -2429,10 +2417,11 @@ final class SnapshotTable(
     require(!evolveSchema || declaredSchema.isEmpty,
       "evolveSchema requires schema inference: a declaredSchema would " +
         "silently drop the evolved columns on read")
+    val inserts0 = deleteFlag.fold(source)(f =>
+      source.filter(!coalesce(col(f).cast("boolean"), lit(false))).drop(f))
     if (!exists) {
       // creating from a flagged source: deletes target nothing yet
-      create(deleteFlag.fold(source)(f =>
-        source.filter(!coalesce(col(f).cast("boolean"), lit(false))).drop(f)))
+      create(inserts0)
       return
     }
     val v = currentVersion.get
@@ -2441,219 +2430,318 @@ final class SnapshotTable(
     // contract as append) unless the caller opted into evolution: an
     // unconformed source would otherwise commit ITS schema over the
     // table's — dropping existing columns outright when every touched
-    // partition is new (merged = src below), or union-coercing the
-    // logged types out from under carried-over files
+    // partition is new, or union-coercing the logged types out from
+    // under carried-over files
     val tableSchema = declaredSchema.orElse(m.schema)
+    def conformed(df: DataFrame): DataFrame =
+      tableSchema.fold(df)(conformToSchema(df, _))
     // checks ride the source's lineage into the write job itself —
     // kept rows (already committed) are never re-checked, and DELETE
     // rows are never checked at all (they remove, they don't land)
-    val inserts0 = deleteFlag.fold(source)(f =>
-      source.filter(!coalesce(col(f).cast("boolean"), lit(false))).drop(f))
     val src0 = guardChecks(inserts0)
-    val src =
-      if (evolveSchema) src0
-      else tableSchema.fold(src0)(conformToSchema(src0, _))
+    val src = if (evolveSchema) src0 else conformed(src0)
     // the KNOCKOUT set: every source row (inserts AND deletes) defines
     // the merge scope and removes its PK match from touched files
-    val knock = deleteFlag match {
-      case None => src
-      case Some(f) =>
-        val all = source.drop(f)
-        tableSchema.fold(all)(conformToSchema(all, _))
-    }
+    val knock = deleteFlag.fold(src)(f => conformed(source.drop(f)))
+    // a batch that OMITS a statted cluster column is REFUSED, not
+    // accommodated: unionByName(allowMissingColumns) would null-fill
+    // the cluster value on every replaced row, silently violating the
+    // PK→cluster-value stability contract pruning rests on — a later
+    // pruned merge could then keep the hidden null-keyed row alongside
+    // its re-sent PK (duplicate keys). Case-insensitive membership,
+    // matching Spark's resolution.
+    val missing = scopeClusterColumns.filterNot(c =>
+      knock.columns.exists(_.equalsIgnoreCase(c)))
+    require(missing.isEmpty,
+      s"upsert batch omits statted cluster column(s) " +
+        s"${missing.mkString(", ")} of $path — a null-filled " +
+        "cluster value would break the PK→cluster stability that " +
+        "stats-scoped merging relies on; include the column " +
+        "explicitly (nulls in the batch disable pruning safely)")
     if (evolveSchema && !fs.exists(evolvedMarker))
       fs.create(evolvedMarker, true).close()
-    val live = m.entries
-    // the merge SCOPE: does a file (in particular one a concurrent
-    // commit added) overlap the slice this merge read and rewrote?
-    // Decides whether a lost commit race may re-base (see commitMerge).
-    var overlapsScope: FileEntry => Boolean = _ => true
-    // (touched, kept-by-reference, batch row count when the scope
-    // aggregate counted it, partition dirs the batch renders into)
-    val (touchedFiles, keptFiles, batchRows, batchDirs)
-        : (Seq[FileEntry], Seq[FileEntry], Option[Long], Option[Int]) =
-      tablePartitionCols match {
-      case Seq() =>
-        // Stats-scoped merge for CLUSTERED unpartitioned layouts (the
-        // Iceberg-hidden-partitioning / Delta-liquid-clustering shape:
-        // no Hive dirs, pruning by per-file min/max instead). Only
-        // files whose cluster-column range can overlap the batch's
-        // [min,max] are read and rewritten; every other live file
-        // carries over by reference — O(touched files) per batch, not
-        // O(table), with NO per-partition-dir file explosion (a daily
-        // batch over a date-clustered 100 TB table touches the handful
-        // of files covering that day, and the rewrite emits a handful
-        // of right-sized files instead of one tiny file per date dir).
-        // Same contract as the partition-scoped branch below: the
-        // PK→cluster-value mapping must be stable across batches. Any
-        // NULL cluster value in the batch disables pruning for that
-        // commit (parquet min/max ignores nulls, so a kept file could
-        // silently hold the null-keyed row the batch replaces).
-        val ccs = clusterColumns
-        // a batch that OMITS a statted cluster column is REFUSED, not
-        // accommodated: unionByName(allowMissingColumns) would null-
-        // fill the cluster value on every replaced row, silently
-        // violating the PK→cluster-value stability contract pruning
-        // rests on — a later pruned merge could then keep the hidden
-        // null-keyed row alongside its re-sent PK (duplicate keys).
-        // Case-insensitive membership, matching Spark's resolution.
-        val statted = ccs.filter(statsColumns.contains)
-        val missing = statted.filterNot(c =>
-          knock.columns.exists(_.equalsIgnoreCase(c)))
-        require(missing.isEmpty,
-          s"upsert batch omits statted cluster column(s) " +
-            s"${missing.mkString(", ")} of $path — a null-filled " +
-            "cluster value would break the PK→cluster stability that " +
-            "stats-scoped merging relies on; include the column " +
-            "explicitly (nulls in the batch disable pruning safely)")
-        val none = Seq.empty[FileEntry]
-        if (statted.isEmpty || live.isEmpty) (live, none, None, None)
-        else {
-          val probe = timed("cluster-bounds")(knock.agg(
-            count(lit(1)),
-            statted.flatMap(c => Seq(
-              min(col(c)), max(col(c)),
-              sum(when(col(c).isNull, 1L).otherwise(0L)))): _*).head())
-          val n = Some(probe.getLong(0))
-          if (probe.getLong(0) == 0L) (none, live, n, None)
-          else {
-            val hasNull = statted.indices.exists(i =>
-              probe.getLong(3 + i * 3) > 0L)
-            if (hasNull) (live, none, n, None)
-            else {
-              // only bounds the stats encoding supports may prune
-              // (integral/float/string/date/timestamp/decimal); a
-              // cluster column of an un-encodable type (binary…)
-              // simply contributes no pruning — never an upsert
-              // failure
-              val bounds = statted.zipWithIndex.flatMap { case (c, i) =>
-                val (lo, hi) = (probe.get(1 + i * 3), probe.get(2 + i * 3))
-                try { FileEntry.enc(lo); FileEntry.enc(hi); Some((c, lo, hi)) }
-                catch { case _: IllegalArgumentException => None }
-              }
-              if (bounds.isEmpty) (live, none, n, None)
-              else {
-                overlapsScope =
-                  e => candidatesOf(Seq(e), bounds).nonEmpty
-                val (t, k) = live.partition(overlapsScope)
-                (t, k, n, None)
-              }
-            }
-          }
-        }
-      case pcs =>
-        // render the partition values exactly the way the writer names
-        // dirs: CAST to string (matches Spark's path rendering for
-        // timestamps etc., unlike java toString), then
-        // getPartitionValueString (escapes AND maps null/empty to
-        // __HIVE_DEFAULT_PARTITION__); multi-level keys join their
-        // per-level values with "/" ([[SnapshotTable.partOf]]'s form).
-        // A mismatch here makes a touched partition look untouched: its
-        // old files carry over alongside the rewrite, duplicating
-        // primary keys.
-        // ONE-reduce-task global aggregate, not distinct(): partial
-        // collect_sets merge map-side, so a single final task replaces
-        // numShufflePartitions mostly-empty ones (guide §2.2 — the
-        // touched set is O(dirs), KBs either way, but the wide
-        // exchange's empty tasks were pure scheduling overhead on
-        // every merge). Driver memory bound is unchanged: the same
-        // O(distinct dirs) rows crossed under distinct().collect().
-        // The current spec's aggregate also counts the batch (the plan
-        // rule's input) in the same job.
-        def rendered(spec: Seq[String], extra: Column*): org.apache.spark.sql.Row =
-          timed("touched-collect")(knock.agg(collect_set(
-            struct(spec.map(c => col(c).cast("string")): _*)), extra: _*)
-            .head())
-        def renderedSet(r: org.apache.spark.sql.Row,
-                        spec: Seq[String]): Set[String] =
-          r.getSeq[org.apache.spark.sql.Row](0)
-            .map(r => spec.indices.map(i =>
-              org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-                .getPartitionValueString(
-                  if (r.isNullAt(i)) null else r.getString(i)))
-              .mkString("/"))
-            .toSet
-        val current = rendered(pcs, count(lit(1)))
-        val touched = renderedSet(current, pcs)
-        // LEGACY-spec vintages (partition-spec evolution): each is
-        // merge-scoped by rendering the batch under ITS OWN spec — a
-        // replaced PK may live in an old-layout file, and matching it
-        // against the new spec's rendering would silently keep it
-        // (duplicate keys). A vintage the batch cannot render (an
-        // evolveSchema source omitting its columns) and the
-        // unpartitioned vintage are conservatively ALL-touched.
-        val knockCols = knock.columns.map(_.toLowerCase).toSet
+    val aligned = alignUntouched(src, m.schema, evolveSchema)
+    if (!mergeScoped)
+      mergeCopyOnWrite(v, m, m.entries, Nil, aligned, knock, evolveSchema,
+        dirHint = None, scope = _ => true)
+    else if (deleteFlag.isEmpty) {
+      val written = stampFieldIds(aligned)
+      mergeStaged(v, m, stageWrite(written), None,
+        withLoggedMetadata(written.schema, m.schema), evolve = evolveSchema,
+        knockCols = Some(knock.columns.toSeq))
+    } else {
+      // upsertDelete: its deletes are never written, so staging the
+      // inserts first would still need an aggregate over the deletes,
+      // and the copy-on-write side (a view refresh's usual one) would
+      // write the inserts twice. ONE aggregate over the whole knock-out
+      // set scopes the merge before anything is written.
+      val part = aggregatePart(knock)
+      val (touched, kept, scope, dirHint) = mergeScope(m.entries, Seq(part),
+        knock, knock.columns.map(_.toLowerCase).toSet)
+      if (mergeOnRead(touched, part.rows)) {
+        // write the inserts alone and hide what every row replaces
+        val written = stampFieldIds(aligned)
+        commitMergeOnRead(v, m, touched, kept,
+          writeDataFiles(written, dirHint = dirHint), knock,
+          withLoggedMetadata(written.schema, m.schema), scope)
+      } else mergeCopyOnWrite(v, m, touched, kept, aligned, knock,
+        evolve = false, dirHint, scope)
+    }
+  }
+
+  /** The statted cluster columns a keyed merge on an unpartitioned
+    * table is scoped by (min/max stats of the batch against each
+    * file's); Nil on partitioned tables, which scope by directory. */
+  private def scopeClusterColumns: Seq[String] =
+    if (tablePartitionCols.nonEmpty) Nil
+    else clusterColumns.filter(statsColumns.contains)
+
+  /** Whether a keyed merge can be scoped below the whole table: by
+    * partition dirs, or by cluster-column stats. */
+  private def mergeScoped: Boolean =
+    tablePartitionCols.nonEmpty || scopeClusterColumns.nonEmpty
+
+  /** What one part of a merge batch contributes to its scope: its row
+    * count, the partition dirs it renders into, and per scope cluster
+    * column its tagged [min, max] (None: no usable bound) and whether
+    * it may hold a null. */
+  private final case class BatchPart(rows: Long, dirs: Set[String],
+                                     bounds: Map[String, Option[(String, String)]],
+                                     mayHoldNull: Map[String, Boolean])
+
+  /** A staged file's part, from its footer entry alone: the dir it was
+    * written under and its recorded stats and null counts. */
+  private def stagedPart(e: FileEntry): BatchPart = {
+    val cs = scopeClusterColumns
+    BatchPart(e.rows,
+      if (tablePartitionCols.isEmpty) Set.empty else Set(partOf(e.path)),
+      // a floating-point footer range leaves NaN out (parquet drops it
+      // from min/max), so it never bounds a batch
+      cs.map(c => c -> e.stats.get(c).filterNot(_._1.startsWith("D:"))).toMap,
+      cs.map(c => c -> e.nullCount(c).forall(_ > 0L)).toMap)
+  }
+
+  /** Render `frame`'s partition values under `spec` exactly the way the
+    * writer names dirs: CAST to string (matches Spark's path rendering
+    * for timestamps etc., unlike java toString), then
+    * getPartitionValueString (escapes AND maps null/empty to
+    * __HIVE_DEFAULT_PARTITION__); multi-level keys join their
+    * per-level values with "/" ([[SnapshotTable.partOf]]'s form). A
+    * mismatch here makes a touched partition look untouched: its old
+    * files carry over alongside the rewrite, duplicating primary keys.
+    * ONE-reduce-task global aggregate, not distinct(): partial
+    * collect_sets merge map-side, so a single final task replaces
+    * numShufflePartitions mostly-empty ones. `extra` aggregates ride
+    * the same job (columns 1.. of the returned row). */
+  private def renderDirs(frame: DataFrame, spec: Seq[String], extra: Column*)
+      : (Set[String], org.apache.spark.sql.Row) = {
+    val r = timed("touched-collect")(frame.agg(collect_set(
+      struct(spec.map(c => col(c).cast("string")): _*)), extra: _*).head())
+    val dirs = r.getSeq[org.apache.spark.sql.Row](0)
+      .map(d => spec.indices.map(i =>
+        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+          .getPartitionValueString(
+            if (d.isNullAt(i)) null else d.getString(i)))
+        .mkString("/"))
+      .toSet
+    (dirs, r)
+  }
+
+  /** The part of a batch a merge does not stage (upsertDelete's whole
+    * knock-out set), from ONE aggregate over its rows: count plus the
+    * dirs they render into, or count plus min/max/null count of each
+    * scope cluster column. A bound the stats encoding cannot express
+    * (binary…) is no bound — never a merge failure. */
+  private def aggregatePart(rows: DataFrame): BatchPart = {
+    val pcs = tablePartitionCols
+    if (pcs.nonEmpty) {
+      val (dirs, r) = renderDirs(rows, pcs, count(lit(1)))
+      BatchPart(r.getLong(1), dirs, Map.empty, Map.empty)
+    } else {
+      val cs = scopeClusterColumns
+      val r = timed("cluster-bounds")(rows.agg(count(lit(1)),
+        cs.flatMap(c => Seq(min(col(c)), max(col(c)),
+          sum(when(col(c).isNull, 1L).otherwise(0L)))): _*).head())
+      def bound(i: Int): Option[(String, String)] =
+        if (r.isNullAt(1 + i * 3) || r.isNullAt(2 + i * 3)) None
+        else try Some((FileEntry.enc(r.get(1 + i * 3)),
+                       FileEntry.enc(r.get(2 + i * 3))))
+        catch { case _: IllegalArgumentException => None }
+      BatchPart(r.getLong(0), Set.empty,
+        cs.indices.map(i => cs(i) -> bound(i)).toMap,
+        cs.indices.map(i => cs(i) ->
+          (!r.isNullAt(3 + i * 3) && r.getLong(3 + i * 3) > 0L)).toMap)
+    }
+  }
+
+  /** The merge SCOPE of a batch summarized by `parts`: (touched files,
+    * files kept by reference, the scope predicate — does a file, in
+    * particular one a concurrent commit added, overlap the slice this
+    * merge reads and replaces? it decides whether a lost commit race
+    * may re-base, see [[commitMerge]] — and the dir count a rewrite
+    * renders into when known). The PK→partition (PK→cluster-value)
+    * mapping must be stable across batches.
+    *  - PARTITIONED: the dirs the parts render into. LEGACY-spec
+    *    vintages (partition-spec evolution) are scoped by rendering
+    *    `knock` under each one's OWN spec — a replaced PK may live in an
+    *    old-layout file, and matching it against the new spec's
+    *    rendering would silently keep it (duplicate keys). A vintage
+    *    whose columns the knock-out rows do not carry (`knockCols`: an
+    *    evolveSchema source omitting them, null-filled in the staged
+    *    batch) and the unpartitioned vintage are all-touched.
+    *  - CLUSTERED (Iceberg hidden partitioning / Delta liquid
+    *    clustering: no Hive dirs, pruning by per-file min/max): only
+    *    files whose cluster-column range can overlap the batch's
+    *    [min, max] are touched. Any NULL cluster value in the batch
+    *    disables pruning for that commit (parquet min/max ignores
+    *    nulls, so a kept file could silently hold the null-keyed row
+    *    the batch replaces), as does a column with no usable bound.
+    * An empty batch touches nothing. */
+  private def mergeScope(live: Seq[FileEntry], parts: Seq[BatchPart],
+                         knock: DataFrame, knockCols: Set[String])
+      : (Seq[FileEntry], Seq[FileEntry], FileEntry => Boolean, Option[Int]) = {
+    val ps = parts.filter(_.rows > 0L)
+    val pcs = tablePartitionCols
+    val dirs = ps.flatMap(_.dirs).toSet
+    val scope: FileEntry => Boolean =
+      if (ps.isEmpty) _ => false
+      else if (pcs.nonEmpty) {
         val legacySets: Map[Seq[String], Option[Set[String]]] =
           live.iterator.map(e => SnapshotTable.specOf(e.path))
             .filter(_ != pcs).toSeq.distinct.map { spec =>
               spec -> (if (spec.nonEmpty &&
                            spec.forall(c => knockCols(c.toLowerCase)))
-                         Some(renderedSet(rendered(spec), spec))
+                         Some(renderDirs(knock, spec)._1)
                        else None)
             }.toMap
-        overlapsScope = e => {
+        e => {
           val sp = SnapshotTable.specOf(e.path)
-          if (sp == pcs) touched(partOf(e.path))
+          if (sp == pcs) dirs(partOf(e.path))
           else legacySets.get(sp).flatten match {
             case Some(set) => set(partOf(e.path))
             case None => true // unknown/unrenderable vintage: conflict
           }
         }
-        val (touchedFiles, keptFiles) = live.partition(overlapsScope)
-        (touchedFiles, keptFiles, Some(current.getLong(1)), Some(touched.size))
-    }
-    if (mergeOnRead(touchedFiles, batchRows)) {
-      // write the batch alone — its rows render into exactly the
-      // `batchDirs` dirs — and hide what it replaces
-      val written = stampFieldIds(alignUntouched(src, m.schema, evolveSchema))
-      val schema = withLoggedMetadata(written.schema, m.schema)
-      val fresh = writeDataFiles(written, dirHint = batchDirs)
-      // a plain upsert knocks out exactly the keys it just wrote: the
-      // probe reads them back from the new files (a scan of the batch's
-      // few small files) instead of evaluating the source lineage a
-      // further time; upsertDelete's deletes are not written, so it
-      // probes with its source
-      val keys = if (deleteFlag.isEmpty) readFilesRaw(fresh, Some(schema))
-                 else knock
-      commitMergeOnRead(v, m, touchedFiles, keptFiles, fresh, keys, schema,
-        overlapsScope)
-    } else {
-      val merged = stampFieldIds(
-        if (touchedFiles.isEmpty)
-          alignUntouched(src, m.schema, evolveSchema) // all-new slice
-        else {
-          val cur = timed("open-touched")(readFiles(touchedFiles, m.schema))
-          val kept = cur
-            .join(knock.select(primaryKey), Seq(primaryKey), "left_anti")
-          if (evolveSchema) kept.unionByName(src, allowMissingColumns = true)
-          else kept.unionByName(
-            src.select(cur.columns.toIndexedSeq.map(col): _*))
-        })
-      // merged rows live only in the batch's dirs — src renders into
-      // them by construction and current-spec kept rows came from
-      // files inside them. A LEGACY-spec touched file (partition-spec
-      // evolution) breaks that: its kept rows carry arbitrary
-      // current-spec values, so the hint is withheld there.
-      val dirHint = batchDirs.filter(_ => touchedFiles.forall(e =>
-        SnapshotTable.specOf(e.path) == tablePartitionCols))
-      commitMerge(v, m, keptFiles, writeDataFiles(merged, dirHint = dirHint),
-        withLoggedMetadata(merged.schema, m.schema), overlapsScope)
-    }
+      } else {
+        val cs = scopeClusterColumns
+        val ord = FileEntry.valueOrdering
+        // one [min, max] per column over every part, when each part
+        // bounds it within one tag family
+        val bounds = cs.flatMap { c =>
+          val bs = ps.map(_.bounds.getOrElse(c, None))
+          val fams = bs.flatten.flatMap(b => Seq(b._1.take(2), b._2.take(2)))
+          if (bs.exists(_.isEmpty) || fams.distinct.size != 1) None
+          else Some((c, bs.flatten.map(_._1).min(ord),
+                     bs.flatten.map(_._2).max(ord)))
+        }
+        if (bounds.isEmpty ||
+            ps.exists(p => cs.exists(p.mayHoldNull.getOrElse(_, true))))
+          _ => true
+        else e => candidatesEncoded(Seq(e), bounds).nonEmpty
+      }
+    val (touched, kept) = live.partition(scope)
+    // merged rows live only in the batch's dirs — the batch renders
+    // into them by construction and current-spec kept rows came from
+    // files inside them. A LEGACY-spec touched file breaks that: its
+    // kept rows carry arbitrary current-spec values, so no hint there.
+    val dirHint =
+      if (pcs.nonEmpty && touched.forall(e => SnapshotTable.specOf(e.path) == pcs))
+        Some(dirs.size)
+      else None
+    (touched, kept, scope, dirHint)
+  }
+
+  /** THE keyed merge of a scoped table, STAGE-FIRST: the batch sits
+    * fully written in the stage `commitId` (`only`: the task-reported
+    * files of an external stager), and the merge decides everything
+    * from the staged footers — the batch's row count, its cluster
+    * columns' min/max and null counts — and the staged partition dirs
+    * ([[mergeScope]]), so the batch is evaluated exactly once, by the
+    * write that staged it. Then, by [[mergeOnRead]]:
+    *  - MERGE-ON-READ: the staged files are promoted as the batch's
+    *    new files and the rows they replace are hidden with deletion
+    *    vectors ([[commitMergeOnRead]]);
+    *  - COPY-ON-WRITE: the staged files are read back as the source of
+    *    the touched files' rewrite ([[mergeCopyOnWrite]]), laid out as
+    *    any write is; an all-new slice of the engine's own stage
+    *    promotes it as it is.
+    * The stage is deleted on every exit. `external`: staged by DSv2
+    * task writers (the merge sink), whose files carry no field ids
+    * (re-written on an id-mapped head, [[rewriteStagedWithIds]]) and
+    * are re-laid out by the rewrite.
+    * `knockCols`: the columns the caller's knock-out rows carry, when
+    * the staged batch null-filled some (default: the batch's). */
+  private def mergeStaged(v: Long, m: Manifest, commitId: String,
+                          only: Option[Set[String]], schema: StructType,
+                          external: Boolean = false,
+                          evolve: Boolean = false,
+                          knockCols: Option[Seq[String]] = None): Unit =
+    try {
+      val staged = probeStage(commitId, only)
+      // planned over the stage: valid until it is promoted or deleted
+      val batch = readStaged(commitId, staged.map(_._2), schema)
+      val parts = staged.map(s => stagedPart(s._2))
+      val (touched, kept, scope, dirHint) = mergeScope(m.entries, parts, batch,
+        knockCols.getOrElse(batch.columns.toSeq).map(_.toLowerCase).toSet)
+      def promoted: Seq[FileEntry] =
+        if (external && headIdMapped) rewriteStagedWithIds(commitId, schema, only)
+        else promoteProbed(commitId, staged,
+          Some(StructType(schema.fields.map(_.copy(nullable = true)))))
+      if (mergeOnRead(touched, parts.map(_.rows).sum)) {
+        val fresh = promoted
+        // the batch knocks out exactly the keys it just promoted: the
+        // probe reads them back from the new files
+        commitMergeOnRead(v, m, touched, kept, fresh,
+          readFilesRaw(fresh, Some(schema)), schema, scope)
+      } else if (touched.isEmpty && (!external || staged.isEmpty))
+        commitMerge(v, m, kept, promoted, schema, scope)
+      else mergeCopyOnWrite(v, m, touched, kept, batch, batch, evolve,
+        dirHint, scope)
+    } finally fs.delete(new Path(stageDirFor(commitId)), true)
+
+  /** The staged batch as a frame, planned from its probed entries alone
+    * (no listing) and read by NAME ([[withoutIds]]) under `schema`. */
+  private def readStaged(commitId: String, staged: Seq[FileEntry],
+                         schema: StructType): DataFrame =
+    if (staged.isEmpty)
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], withoutIds(schema))
+    else indexedRead(stageDirFor(commitId), staged, withoutIds(schema))
+
+  /** The copy-on-write side of a keyed merge: the `touched` files' rows
+    * whose key `knock` does not carry, plus `batch`, rewritten as new
+    * files; `kept` carry over by reference. */
+  private def mergeCopyOnWrite(v: Long, m: Manifest, touched: Seq[FileEntry],
+                               kept: Seq[FileEntry], batch: DataFrame,
+                               knock: DataFrame, evolve: Boolean,
+                               dirHint: Option[Int],
+                               scope: FileEntry => Boolean): Unit = {
+    val merged = stampFieldIds(
+      if (touched.isEmpty) batch // all-new slice
+      else {
+        val cur = timed("open-touched")(readFiles(touched, m.schema))
+        val rest = cur
+          .join(knock.select(primaryKey), Seq(primaryKey), "left_anti")
+        if (evolve) rest.unionByName(batch, allowMissingColumns = true)
+        else rest.unionByName(
+          batch.select(cur.columns.toIndexedSeq.map(col): _*))
+      })
+    commitMerge(v, m, kept, writeDataFiles(merged, dirHint = dirHint),
+      withLoggedMetadata(merged.schema, m.schema), scope)
   }
 
   /** THE plan rule of a keyed merge: merge-on-read iff the touched
     * files' LIVE rows (manifest `rows − deletedRowCount`, the exact
-    * files the merge scope selected) exceed the batch's row count —
-    * then hiding the replaced rows and writing only the batch moves
-    * fewer bytes than rewriting the slice. Otherwise (a batch about as
-    * large as what it touches, an all-new slice, no batch count from
-    * the scope aggregate, or a file with no recorded row count) the
-    * merge rewrites copy-on-write, exactly as before the rule existed.
-    * Metadata only: no job, no option. */
-  private def mergeOnRead(touched: Seq[FileEntry],
-                          batchRows: Option[Long]): Boolean =
-    touched.nonEmpty && touched.forall(_.rows >= 0L) && batchRows.exists(
-      _ < touched.iterator.map(e => e.rows - e.deletedRowCount).sum)
+    * files the merge scope selected) exceed the batch's row count (the
+    * staged footers' rows plus any delete rows) — then hiding the
+    * replaced rows and writing only the batch moves fewer bytes than
+    * rewriting the slice. Otherwise (a batch about as large as what it
+    * touches, an all-new slice, or a file with no recorded row count)
+    * the merge rewrites copy-on-write. Metadata only: no job, no
+    * option. */
+  private def mergeOnRead(touched: Seq[FileEntry], batchRows: Long): Boolean =
+    touched.nonEmpty && touched.forall(_.rows >= 0L) &&
+      batchRows < touched.iterator.map(e => e.rows - e.deletedRowCount).sum
 
   /** Commit the merge-on-read side of a merge: `fresh` (the written
     * batch), `kept` by reference, and `touched` with every row whose
@@ -3179,12 +3267,6 @@ final class SnapshotTable(
                            vectors: Map[String, graft.functions.DeleteBitmap] = Map.empty)
       : DataFrame = {
     val effective = declaredSchema.orElse(manifestSchema)
-    // the provenance projection: (file path, row position) straight off
-    // the parquet scan's metadata struct, aliased to reserved names so
-    // callers can address them without re-resolving `_metadata`
-    def posCols: Seq[Column] = Seq(
-      col("_metadata.file_path").as(SnapshotTable.PosFileCol),
-      col("_metadata.row_index").as(SnapshotTable.PosIdxCol))
     if (entries.isEmpty) {
       // a delete can legitimately empty the table; parquet() with zero
       // paths cannot infer a schema, so type the empty frame explicitly
@@ -3210,46 +3292,16 @@ final class SnapshotTable(
     // column (nothing may be inferred without I/O) and recorded file
     // lengths (manifests written before either was logged fall back to
     // the listing path below).
-    // files group by the spec THEIR OWN paths encode: after a
-    // partition-spec evolution a snapshot legitimately mixes vintages,
-    // and each group plans with its own partition schema — old files'
-    // evolved-away partition values come from their dirs, the same
-    // column in new files reads as plain data (and vice versa)
-    val specGroups = entries.groupBy(e => SnapshotTable.specOf(e.path))
-    val indexable = effective.exists(s =>
-      specGroups.keysIterator.flatten.forall(s.fieldNames.contains)) &&
+    val indexable = effective.exists(s => entries.iterator
+        .flatMap(e => SnapshotTable.specOf(e.path)).forall(s.fieldNames.contains)) &&
       entries.forall(_.len >= 0) &&
       // files under Hive dirs with NO known partition column (possible
       // only for manifests from before the layout was logged) must take
       // the inferring path — the index would plan the partition column
       // as data and read it null
       (tablePartitionCols.nonEmpty || entries.forall(e => !e.path.contains("=")))
-    if (indexable) {
-      val schema = effective.get
-      val named = schema.fieldNames.toIndexedSeq.map(col)
-      val frames = specGroups.toSeq.sortBy(_._1.mkString(","))
-        .map { case (spec, es) =>
-          val partSchema = StructType(
-            spec.flatMap(c => schema.fields.find(_.name == c)))
-          val dataSchema = StructType(
-            schema.fields.filterNot(f => spec.contains(f.name)))
-          val rel = HadoopFsRelation(
-            new ManifestFileIndex(spark, dataDir, es, partSchema),
-            partSchema, dataSchema, None,
-            if (vectors.isEmpty)
-              new org.apache.spark.sql.execution.datasources.parquet
-                .ParquetFileFormat
-            else new DvParquetFileFormat(vectors),
-            Map.empty)(spark)
-          // relation schema is dataSchema ++ partitionSchema; restore
-          // the declared column order (metadata provenance resolved
-          // HERE, on the relation-rooted frame, where `_metadata` is
-          // in scope)
-          spark.baseRelationToDataFrame(rel)
-            .select((if (withPos) named ++ posCols else named): _*)
-        }
-      return frames.reduce(_ unionByName _)
-    }
+    if (indexable)
+      return indexedRead(dataDir, entries, effective.get, withPos, vectors)
     // Listing fallback (pre-schema/pre-meta manifests). mergeSchema only
     // once the table has actually evolved: a snapshot then mixes pre-
     // and post-evolution files (untouched partitions carry over by
@@ -3275,6 +3327,51 @@ final class SnapshotTable(
       }
     if (!withPos) frame
     else frame.select(frame.columns.toIndexedSeq.map(col) ++ posCols: _*)
+  }
+
+  /** The provenance projection: (file path, row position) straight off
+    * the parquet scan's metadata struct, aliased to reserved names so
+    * callers can address them without re-resolving `_metadata`. */
+  private def posCols: Seq[Column] = Seq(
+    col("_metadata.file_path").as(SnapshotTable.PosFileCol),
+    col("_metadata.row_index").as(SnapshotTable.PosIdxCol))
+
+  /** Read `entries` (paths relative to `root`: the data dir, or a
+    * stage) under `schema`, planned from the entries alone through a
+    * [[ManifestFileIndex]]. Files group by the spec THEIR OWN paths
+    * encode: after a partition-spec evolution a snapshot legitimately
+    * mixes vintages, and each group plans with its own partition
+    * schema — old files' evolved-away partition values come from their
+    * dirs, the same column in new files reads as plain data (and vice
+    * versa). */
+  private def indexedRead(root: String, entries: Seq[FileEntry],
+                          schema: StructType, withPos: Boolean = false,
+                          vectors: Map[String, graft.functions.DeleteBitmap] = Map.empty)
+      : DataFrame = {
+    val named = schema.fieldNames.toIndexedSeq.map(col)
+    entries.groupBy(e => SnapshotTable.specOf(e.path)).toSeq
+      .sortBy(_._1.mkString(","))
+      .map { case (spec, es) =>
+        val partSchema = StructType(
+          spec.flatMap(c => schema.fields.find(_.name == c)))
+        val dataSchema = StructType(
+          schema.fields.filterNot(f => spec.contains(f.name)))
+        val rel = HadoopFsRelation(
+          new ManifestFileIndex(spark, root, es, partSchema),
+          partSchema, dataSchema, None,
+          if (vectors.isEmpty)
+            new org.apache.spark.sql.execution.datasources.parquet
+              .ParquetFileFormat
+          else new DvParquetFileFormat(vectors),
+          Map.empty)(spark)
+        // relation schema is dataSchema ++ partitionSchema; restore
+        // the declared column order (metadata provenance resolved
+        // HERE, on the relation-rooted frame, where `_metadata` is
+        // in scope)
+        spark.baseRelationToDataFrame(rel)
+          .select((if (withPos) named ++ posCols else named): _*)
+      }
+      .reduce(_ unionByName _)
   }
 
   /** Planning inputs for an external scan of one snapshot (the DSv2
@@ -3474,10 +3571,16 @@ final class SnapshotTable(
     candidatesOf(currentManifest.entries, bounds)
 
   private[graft] def candidatesOf(entries: Seq[FileEntry],
-                           bounds: Seq[(String, Any, Any)]): Seq[FileEntry] = {
-    val encoded = bounds.map { case (c, lo, hi) =>
+                           bounds: Seq[(String, Any, Any)]): Seq[FileEntry] =
+    candidatesEncoded(entries, bounds.map { case (c, lo, hi) =>
       (c, FileEntry.enc(lo), FileEntry.enc(hi))
-    }
+    })
+
+  /** [[candidatesOf]] over bounds already tagged the way footer stats
+    * are (a staged batch's own footer range). */
+  private def candidatesEncoded(entries: Seq[FileEntry],
+                                encoded: Seq[(String, String, String)])
+      : Seq[FileEntry] = {
     entries.filter(e => encoded.forall { case (c, lo, hi) =>
         e.stats.get(c) match {
           // compare only within a tag family: a bound typed differently

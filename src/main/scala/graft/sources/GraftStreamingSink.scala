@@ -50,7 +50,11 @@ final class GraftStreamingWrite(
   /** MERGE mode — `option("mergeKey", col)`: each epoch UPSERTS by the
     * key instead of blind-appending (the streaming form of the batch
     * sink's primaryKey merge; public Delta needs foreachBatch for
-    * this). Same epoch mark, same replay detection. */
+    * this). Same epoch mark, same replay detection. On a scoped table
+    * the task-staged files ARE the batch of the table's stage-first
+    * merge ([[SnapshotTable.commitStagedStreamUpsert]]): scoped from
+    * their footers and dirs, promoted when it merges on read, read
+    * back when it rewrites. */
   private val mergeKey: Option[String] = options.get("mergeKey")
   require(mergeKey.isEmpty || !truncate,
     "mergeKey is incompatible with Complete mode: a per-epoch replace " +

@@ -137,6 +137,116 @@ class PipelineRetrySpec extends SparkSpec {
       "a pipeline run left a cached frame registered in the session")
   }
 
+  /** One daily drop of the reference's three tables, with one of each
+    * defect class: a null key, an unparseable timestamp, a missing
+    * required column, a duplicate key and an orphan per foreign key. */
+  private def referenceDrop(raw: String, tag: String): Unit = {
+    def csv(table: String, header: String, rows: String*): Unit = {
+      val dir = new java.io.File(s"$raw/$table")
+      dir.mkdirs()
+      val w = new java.io.PrintWriter(new java.io.File(dir, s"$tag.csv"), "UTF-8")
+      try { w.println(header); rows.foreach(w.println) } finally w.close()
+    }
+    csv("products", "product_id,department_id,department,product_name",
+      "1,10,dairy,milk", "2,10,dairy,cheese", "3,20,bakery,bread",
+      ",20,bakery,nokey", "2,10,dairy,cheese v2")
+    csv("orders", "order_num,order_id,user_id,order_timestamp,total_amount,date",
+      "1,100,7,2024-01-01 10:00:00,10.5,2024-01-01",
+      "2,101,7,2024-01-02 11:00:00,20.0,2024-01-02",
+      "3,102,8,not-a-time,5.0,2024-01-02",
+      "4,,9,2024-01-02 12:00:00,1.0,2024-01-02")
+    csv("order_items", "id,order_id,user_id,days_since_prior_order," +
+        "product_id,add_to_cart_order,reordered,order_timestamp,date",
+      "1,100,7,,1,1,0,2024-01-01 10:00:00,2024-01-01",
+      "2,100,7,,3,2,0,2024-01-01 10:00:00,2024-01-01",
+      "3,101,7,1,2,1,1,2024-01-02 11:00:00,2024-01-02",
+      "4,999,7,1,2,2,1,2024-01-02 11:00:00,2024-01-02",
+      "5,101,7,1,42,3,1,2024-01-02 11:00:00,2024-01-02",
+      "6,101,7,1,,4,1,2024-01-02 11:00:00,2024-01-02")
+  }
+
+  private def csvRows(dir: String): Long =
+    if (!new java.io.File(dir).exists) 0L
+    else spark.read.option("header", "true").csv(dir).count()
+
+  test("a reference drop reports its read, rejected, orphaned and loaded counts; side outputs land") {
+    val base = Files.createTempDirectory("graft_pipe_counts").toString
+    referenceDrop(s"$base/raw", "d1")
+    val report = Pipeline.run(spark, s"$base/raw", s"$base/dwh",
+      s"$base/rejected", s"$base/archived", retryAttempts = 1, retryDelayMs = 1)
+    assert(report.gatesPassed)
+    assert(report.jobs.map(j => (j.name, j.read, j.valid, j.rejected, j.orphaned, j.loaded)) ==
+      Seq(("products", 5L, 4L, 1L, 0L, 3L),
+        ("orders", 4L, 2L, 2L, 0L, 2L),
+        ("order_items", 6L, 5L, 1L, 2L, 3L)))
+    assert(Seq("products", "orders", "order_items", "order_items_ri_order_id",
+      "order_items_ri_product_id").map(n => csvRows(s"$base/rejected/$n")) ==
+      Seq(1L, 2L, 1L, 1L, 1L))
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("a failing attempt appends its rejects exactly once and leaves no cache behind") {
+    val base = Files.createTempDirectory("graft_pipe_fail").toString
+    referenceDrop(s"$base/raw", "d1")
+    // a plain FILE where the products table's directory belongs: every
+    // attempt's merge fails after its reject write has been launched
+    new java.io.File(s"$base/dwh").mkdirs()
+    new java.io.File(s"$base/dwh/products").createNewFile()
+    spark.catalog.clearCache()
+    intercept[Exception](Pipeline.run(spark, s"$base/raw", s"$base/dwh",
+      s"$base/rejected", s"$base/archived",
+      jobs = Pipeline.referenceJobs.take(1), retryAttempts = 2, retryDelayMs = 1))
+    assert(csvRows(s"$base/rejected/products") == 2L,
+      "each of the two attempts must append its one reject exactly once")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a failed pipeline left a cached frame registered in the session")
+  }
+
+  test("a failed wave writes none of a dependent job's side outputs and releases its validation") {
+    val base = Files.createTempDirectory("graft_pipe_wave_fail").toString
+    referenceDrop(s"$base/raw", "d1")
+    new java.io.File(s"$base/dwh").mkdirs()
+    new java.io.File(s"$base/dwh/orders").createNewFile()
+    spark.catalog.clearCache()
+    intercept[Exception](Pipeline.run(spark, s"$base/raw", s"$base/dwh",
+      s"$base/rejected", s"$base/archived", retryAttempts = 1, retryDelayMs = 1))
+    // order_items was validated beside wave 1, but never ran its attempt
+    assert(!new java.io.File(s"$base/rejected/order_items").exists)
+    assert(!new java.io.File(s"$base/rejected/order_items_ri_order_id").exists)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a dependent job's validation outlived the failed pipeline")
+  }
+
+  test("every SQL execution of a second run is its own root execution") {
+    val base = Files.createTempDirectory("graft_pipe_roots").toString
+    def run(): Pipeline.Report = Pipeline.run(spark, s"$base/raw", s"$base/dwh",
+      s"$base/rejected", s"$base/archived", retryAttempts = 1, retryDelayMs = 1)
+    referenceDrop(s"$base/raw", "d1")
+    run()
+    referenceDrop(s"$base/raw", "d2")
+    val roots = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Option[Long])]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            roots.add((s.executionId, s.rootExecutionId.map(_.asInstanceOf[Long])))
+          case _ => ()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try assert(run().gatesPassed)
+    finally {
+      org.apache.spark.graft.ListenerBusDrain.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val seen = roots.asScala.toSeq
+    assert(seen.nonEmpty)
+    val nested = seen.filterNot { case (id, root) => root.contains(id) }
+    assert(nested.isEmpty, s"executions filed under another root: ${nested.take(5)}")
+  }
+
   test("T8 hook: a job that exhausts retries notifies failure exactly once, then rethrows") {
     val base = Files.createTempDirectory("graft_pipe_t8").toString
     val schema = org.apache.spark.sql.types.StructType(Seq(
