@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.functions.TextAnalysis
 import graft.operators.{AsOfJoin, Dedup, Integrity, Multimodal, RangeJoin, Sessionize, Similarity, Skew, TextDedup, Validation, ZOrder}
-import graft.plans.{LakehouseTable, Pipeline, SnapshotTable}
+import graft.plans.{Pipeline, SnapshotTable}
 import graft.streaming.{Ingest, StreamDedup, WindowedAgg}
 
 /** The SURVEY.md §2 operator surface as named queries over the driver
@@ -479,47 +479,42 @@ object Queries {
     "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
     "o_orderdate", "o_orderpriority")
 
-  /** K1/K2/S2 — MERGE upsert emulation, run twice with the same source to
-    * also prove idempotency (reference semantics: orders_etl.py:65-71).
+  /** K1/K2/S2 — MERGE upsert, run twice with the same source to also
+    * prove idempotency (reference semantics: orders_etl.py:65-71).
     * Target = even order keys; source = keys divisible by 3 with bumped
     * totals. Result = evens not div-3 untouched + all div-3 rows updated/
     * inserted. */
-  def upsertMerge(s: SparkSession, dir: String): DataFrame = {
-    val orders = t(s, dir, "orders")
-    val target = orders.filter(col("o_orderkey") % 2 === 0)
-    val source = orders.filter(col("o_orderkey") % 3 === 0)
-      .withColumn("o_totalprice", round(col("o_totalprice") + 1.0d, 2))
-    val table = LakehouseTable(s, scratch("upsert", dir), "o_orderkey",
-      partitionCol = Some("o_orderstatus"))
-    table.create(target)
-    table.upsert(source)
-    table.upsert(source) // idempotent re-run: must be a no-op
+  def upsertMerge(s: SparkSession, dir: String): DataFrame =
+    ordersUpsertedTwice(s, scratch("upsert", dir), dir)
+      .read.select(ordersCols.map(col): _*)
+
+  /** K2 plus retention — [[upsertMerge]]'s two merges, then a vacuum
+    * that reclaims the files the merges replaced. Every upsert is ONE
+    * atomic manifest commit (readers see the old or the new snapshot,
+    * never a mixed partition state) and untouched partitions carry over
+    * by reference. Same oracle as upsert_merge: reclaiming replaced
+    * files must not change the result. */
+  def snapshotUpsert(s: SparkSession, dir: String): DataFrame = {
+    val table = ordersUpsertedTwice(s, scratch("snapshot", dir), dir)
+    table.vacuum(keepVersions = 2, retentionMs = 0) // single writer here
     table.read.select(ordersCols.map(col): _*)
   }
 
-  /** K2 (atomic variant) — the same MERGE semantics as [[upsertMerge]]
-    * through [[graft.plans.SnapshotTable]]: every upsert is ONE atomic
-    * manifest commit (readers see old or new snapshot, never a mixed
-    * partition state — the Delta-parity consistency LakehouseTable
-    * trades away), untouched partitions carry over by reference, and
-    * vacuum reclaims pre-retention files. Same oracle as upsert_merge:
-    * the stronger commit protocol must not change the result. */
-  def snapshotUpsert(s: SparkSession, dir: String): DataFrame = {
+  /** The even-keyed orders created at `base` (from fresh dirs, so every
+    * run has the same history), then the div-3 slice with bumped totals
+    * upserted twice: the re-run commits a new, identical snapshot. */
+  private def ordersUpsertedTwice(s: SparkSession, base: String,
+                                  dir: String): plans.SnapshotTable = {
     val orders = t(s, dir, "orders")
-    val target = orders.filter(col("o_orderkey") % 2 === 0)
     val source = orders.filter(col("o_orderkey") % 3 === 0)
       .withColumn("o_totalprice", round(col("o_totalprice") + 1.0d, 2))
-    val base = scratch("snapshot", dir)
-    val p = new org.apache.hadoop.fs.Path(base)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true) // deterministic full re-run
+    freshDirs(s, base)
     val table = plans.SnapshotTable(s, base, "o_orderkey",
       partitionCol = Some("o_orderstatus"))
-    table.create(target)
+    table.create(orders.filter(col("o_orderkey") % 2 === 0))
     table.upsert(source)
-    table.upsert(source) // idempotent re-run: a new (identical) snapshot
-    table.vacuum(keepVersions = 2, retentionMs = 0) // single writer here
-    table.read.select(ordersCols.map(col): _*)
+    table.upsert(source)
+    table
   }
 
   /** Schema evolution by TYPE WIDENING ([[SnapshotTable.widenColumn]],
@@ -2049,9 +2044,11 @@ object Queries {
   def partitionPrunedScan(s: SparkSession, dir: String): DataFrame = {
     val events = t(s, dir, "events")
       .withColumn("date", date_format(Tables.eventsTs("ts"), "yyyy-MM-dd"))
-    val path = scratch("partitioned_events", dir)
+    // _v2: the Hive-layout directory of the retired table format stays
+    // behind under the old path — a path bump is the invalidation
+    val path = scratch("partitioned_events_v2", dir)
     val schema = StructType(events.schema.fields.map(_.copy(nullable = true)))
-    val table = LakehouseTable(s, path, "event_id",
+    val table = plans.SnapshotTable(s, path, "event_id",
       partitionCol = Some("date"), declaredSchema = Some(schema))
     if (!table.exists) table.create(events)
     val firstDate = "2024-01-05"
@@ -2272,8 +2269,8 @@ object Queries {
     // ingest (a CSV re-write would rename every part file and make the
     // checkpoint reprocess the world against an already-full table)
     freshDirs(s, s"$base/table", s"$base/checkpoint")
-    val table = LakehouseTable(s, s"$base/table", "event_id",
-      Some("date"), Some(streamedEventsSchema))
+    val table = plans.SnapshotTable(s, s"$base/table", "event_id",
+      Some("date"), Some(Tables.asNullable(streamedEventsSchema)))
     val stageSec = (System.nanoTime - stage0) / 1e9
     val run0 = System.nanoTime
     val q = Ingest.csvToTable(s, landing, streamedEventsSchema, table,

@@ -184,9 +184,9 @@ object Pipeline {
           retryAttempts: Int, retryDelayMs: Long): Report = {
     val pool = runPool()
     def concurrently[A](body: => A): Future[A] = async(spark, pool)(body)
-    // SnapshotTable over LakehouseTable here: the manifest commit
-    // (parallel per-file metadata + one rename) makes each job's
-    // upsert atomic, which the retry loop relies on. CLUSTERED layout
+    // the manifest commit (parallel per-file metadata + one rename)
+    // makes each job's upsert atomic, which the retry loop relies
+    // on. CLUSTERED layout
     // over Hive partitioning (see JobSpec.clusterCol): the daily date
     // key stays prunable via manifest min/max stats without fanning
     // every batch out to thousands of near-empty partition dirs.

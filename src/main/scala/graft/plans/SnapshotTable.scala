@@ -14,13 +14,12 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType,
   DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType,
   StructType, TimestampNTZType}
 
-/** A partitioned parquet table with ATOMIC multi-partition commits via a
-  * manifest pointer file — the missing half of [[LakehouseTable]]'s
-  * consistency story (its dynamic partition overwrite commits per
-  * partition, so a mid-job crash can expose a mixed table state until
-  * retry). Here every commit is all-or-nothing, Delta/Iceberg-style
-  * (reference analog: Delta MERGE's atomic commit, orders_etl.py:67-71),
-  * with no Delta jar:
+/** graft's table format: a partitioned parquet table with ATOMIC
+  * multi-partition commits via a manifest pointer file, behind every
+  * keyed table, the pipeline, the ingest loop and the catalog. Every
+  * commit is all-or-nothing, Delta/Iceberg-style (reference analog:
+  * Delta MERGE's atomic commit, orders_etl.py:67-71), with no Delta
+  * jar:
   *
   *  - Data files are immutable, written under Hive-style partition dirs
   *    `data/<pc>=<value>/<commit>-<file>.parquet`; a commit never
@@ -135,16 +134,6 @@ final class SnapshotTable(
 
   private def fs: FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Phase timing, printed only when GRAFT_TIMING is set (dev tool —
-    * the commit path is FS-metadata-bound and regressions hide in
-    * whichever phase one isn't looking at). */
-  private def timed[A](tag: String)(body: => A): A =
-    if (sys.env.contains("GRAFT_TIMING")) {
-      val t0 = System.nanoTime()
-      try body
-      finally println(f"[snap-timing] $tag ${(System.nanoTime() - t0) / 1e9}%.1fs")
-    } else body
 
   /** Run an eager DML body with scan splits derived from BYTES alone.
     *
@@ -1106,8 +1095,8 @@ final class SnapshotTable(
     // manifest commit.
     val w = clustered.write.mode("overwrite")
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-    timed("write-stage")((if (tablePartitionCols.isEmpty) w
-      else w.partitionBy(tablePartitionCols: _*)).parquet(stage))
+    (if (tablePartitionCols.isEmpty) w
+      else w.partitionBy(tablePartitionCols: _*)).parquet(stage)
     commitId
   }
 
@@ -1144,7 +1133,7 @@ final class SnapshotTable(
       }
     // a rewrite can legitimately stage nothing (e.g. a row-level delete
     // of every scanned row): no stage dir, no files
-    if (fs.exists(stage)) timed("walk")(walk(stage, ""))
+    if (fs.exists(stage)) walk(stage, "")
     out.toSeq
   }
 
@@ -1162,12 +1151,12 @@ final class SnapshotTable(
   private def probeStage(commitId: String, only: Option[Set[String]])
       : Seq[(Path, FileEntry)] = {
     val statCols = effectiveLayout.statsCols
-    timed("footer-stats")(inParallel(walkStage(commitId, only)) {
+    inParallel(walkStage(commitId, only)) {
       case (src, rel, len, mtime) =>
         val (rows, stats) = footerProbe(src, statCols)
         (src, FileEntry(rel,
           stats + FileEntry.metaStat(len, mtime) + FileEntry.rowsStat(rows)))
-    }).filter(_._2.rows > 0L)
+    }.filter(_._2.rows > 0L)
   }
 
   /** Move a fully-written staging tree into the canonical data dir and
@@ -1193,13 +1182,13 @@ final class SnapshotTable(
       (src, e.copy(path =
         s"${e.path.take(cut)}$commitId-$i-${e.path.drop(cut)}"))
     }
-    timed("moves")(inParallel(moving) { case (src, e) =>
+    inParallel(moving) { case (src, e) =>
       val dest = new Path(s"$dataDir/${e.path}")
       fs.mkdirs(dest.getParent)
       if (!fs.rename(src, dest))
         throw new IllegalStateException(s"data move failed: $dest")
-    })
-    timed("stage-delete")(fs.delete(new Path(stageDirFor(commitId)), true))
+    }
+    fs.delete(new Path(stageDirFor(commitId)), true)
     val entries = moving.map(_._2)
     val blooms = fileBlooms(entries, bloomSchema)
     entries.map(e => e.copy(stats = e.stats ++ blooms.getOrElse(e.path, Map.empty)))
@@ -2383,8 +2372,7 @@ final class SnapshotTable(
     * manifest rename, then the new one, never a mix.
     *
     * @param evolveSchema allow the source to carry NEW columns: kept
-    *   rows read them as null (mergeSchema), mirroring
-    *   [[LakehouseTable.upsert]]'s evolution contract. Incompatible
+    *   rows read them as null (Delta's mergeSchema). Incompatible
     *   with a declaredSchema (a pinned schema would silently project
     *   the new column away on every read). */
   def upsert(source: DataFrame, evolveSchema: Boolean = false): Unit =
@@ -2535,8 +2523,8 @@ final class SnapshotTable(
     * the same job (columns 1.. of the returned row). */
   private def renderDirs(frame: DataFrame, spec: Seq[String], extra: Column*)
       : (Set[String], org.apache.spark.sql.Row) = {
-    val r = timed("touched-collect")(frame.agg(collect_set(
-      struct(spec.map(c => col(c).cast("string")): _*)), extra: _*).head())
+    val r = frame.agg(collect_set(
+      struct(spec.map(c => col(c).cast("string")): _*)), extra: _*).head()
     val dirs = r.getSeq[org.apache.spark.sql.Row](0)
       .map(d => spec.indices.map(i =>
         org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -2559,9 +2547,9 @@ final class SnapshotTable(
       BatchPart(r.getLong(1), dirs, Map.empty, Map.empty)
     } else {
       val cs = scopeClusterColumns
-      val r = timed("cluster-bounds")(rows.agg(count(lit(1)),
+      val r = rows.agg(count(lit(1)),
         cs.flatMap(c => Seq(min(col(c)), max(col(c)),
-          sum(when(col(c).isNull, 1L).otherwise(0L)))): _*).head())
+          sum(when(col(c).isNull, 1L).otherwise(0L)))): _*).head()
       def bound(i: Int): Option[(String, String)] =
         if (r.isNullAt(1 + i * 3) || r.isNullAt(2 + i * 3)) None
         else try Some((FileEntry.enc(r.get(1 + i * 3)),
@@ -2719,9 +2707,8 @@ final class SnapshotTable(
     val merged = stampFieldIds(
       if (touched.isEmpty) batch // all-new slice
       else {
-        val cur = timed("open-touched")(readFiles(touched, m.schema))
-        val rest = cur
-          .join(knock.select(primaryKey), Seq(primaryKey), "left_anti")
+        val cur = readFiles(touched, m.schema)
+        val rest = byKnockedKey(cur, knock, "left_anti")
         if (evolve) rest.unionByName(batch, allowMissingColumns = true)
         else rest.unionByName(
           batch.select(cur.columns.toIndexedSeq.map(col): _*))
@@ -2729,6 +2716,17 @@ final class SnapshotTable(
     commitMerge(v, m, kept, writeDataFiles(merged, dirHint = dirHint),
       withLoggedMetadata(merged.schema, m.schema), scope)
   }
+
+  /** `rows` whose primary key `knock` carries (`left_semi`) or does not
+    * (`left_anti`), matched NULL-SAFE: a null key knocks out the
+    * null-keyed row, so re-running a batch that holds one replaces that
+    * row instead of adding a copy. The knock-out key is renamed, so a
+    * `knock` planned from the table itself cannot make the condition
+    * ambiguous. */
+  private def byKnockedKey(rows: DataFrame, knock: DataFrame,
+                           how: String): DataFrame =
+    rows.join(knock.select(col(primaryKey).as("__knock_pk")),
+      rows(primaryKey) <=> col("__knock_pk"), how)
 
   /** THE plan rule of a keyed merge: merge-on-read iff the touched
     * files' LIVE rows (manifest `rows − deletedRowCount`, the exact
@@ -2751,18 +2749,20 @@ final class SnapshotTable(
     * ([[SnapshotTable.deleteBitmapsOf]], the builder [[deleteMoR]]
     * uses); matched files commit with their old and new vectors
     * unioned (a position already hidden may match again — the union
-    * absorbs it), unmatched ones by reference. A NULL key never
-    * matches, as the copy-on-write anti-join keeps null-keyed rows. */
+    * absorbs it), unmatched ones by reference. A NULL key matches the
+    * null-keyed row, as in the copy-on-write anti-join
+    * ([[byKnockedKey]]). */
   private def commitMergeOnRead(v: Long, m: Manifest, touched: Seq[FileEntry],
                                 kept: Seq[FileEntry], fresh: Seq[FileEntry],
                                 knock: DataFrame, schema: StructType,
                                 scope: FileEntry => Boolean): Unit = {
-    val pairs = readFilesRaw(touched, m.schema, withPos = true)
-      .select(col(primaryKey),
-        substring_index(col(SnapshotTable.PosFileCol), "/", -1).as("f"),
-        col(SnapshotTable.PosIdxCol).as("p"))
-      .join(knock.select(primaryKey), Seq(primaryKey), "left_semi")
-    val byBase = timed("mor-probe")(SnapshotTable.deleteBitmapsOf(pairs))
+    val pairs = byKnockedKey(
+      readFilesRaw(touched, m.schema, withPos = true)
+        .select(col(primaryKey),
+          substring_index(col(SnapshotTable.PosFileCol), "/", -1).as("f"),
+          col(SnapshotTable.PosIdxCol).as("p")),
+      knock, "left_semi")
+    val byBase = SnapshotTable.deleteBitmapsOf(pairs)
     val (hit, clean) = touched.partition(e =>
       byBase.contains(SnapshotTable.basename(e.path)))
     commitMerge(v, m, kept ++ clean, fresh, schema, scope,

@@ -4,21 +4,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.plans.{LakehouseTable, SnapshotTable}
+import graft.plans.SnapshotTable
 
 /** The reference's event-driven ingestion loop (T1/T2; reference:
   * README.md:76-90 — S3 event → SQS → Lambda → pipeline) re-expressed as
   * Structured Streaming: a file source watches the landing directory,
-  * each micro-batch MERGEs into the lakehouse table by PK, and
-  * `Trigger.AvailableNow` gives the reference's "process everything
-  * that has arrived, then stop" batch-per-arrival semantics.
+  * each micro-batch MERGEs into a [[SnapshotTable]] by PK as ONE atomic
+  * manifest commit, and `Trigger.AvailableNow` gives the reference's
+  * "process everything that has arrived, then stop" batch-per-arrival
+  * semantics. A concurrent reader always sees a complete batch
+  * boundary, never a batch applied to some partitions and not others.
   *
   * Idempotent late/duplicate handling is inherited from the MERGE-by-PK
   * sink (T2; orders_etl.py:65-71) — no watermark needed for parity
   * (SURVEY.md §2.10: the reference has no event-time operators). The
   * checkpoint gives exactly-once file tracking across restarts, which
-  * is STRONGER than the reference's at-least-once Lambda trigger; the
-  * upsert makes re-delivery harmless either way.
+  * is STRONGER than the reference's at-least-once Lambda trigger; a
+  * batch replayed after a crash re-merges idempotently, and its extra
+  * commit is content-identical and vacuumable.
   *
   * Scale notes (100 TB): the file source lists incrementally
   * (`maxFilesPerTrigger` bounds batch size); each batch's upsert cost is
@@ -32,7 +35,7 @@ object Ingest {
     * (AvailableNow) — `recentProgress` carries the per-micro-batch
     * duration breakdown for callers that attribute wall time. */
   def csvToTable(spark: SparkSession, landingDir: String, schema: StructType,
-                 table: LakehouseTable, checkpointDir: String,
+                 table: SnapshotTable, checkpointDir: String,
                  maxFilesPerTrigger: Option[Int] = None,
                  timestampFormat: String = "yyyy-MM-dd['T'][' ']HH:mm:ss")
       : StreamingQuery = {
@@ -41,25 +44,11 @@ object Ingest {
       .option("header", "true")
       .option("timestampFormat", timestampFormat)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    runToTable(reader.csv(landingDir), table, checkpointDir)
+    upsertEachBatch(reader.csv(landingDir), table, checkpointDir)
   }
 
-  /** Stream parquet files from `landingDir` into `table` (same loop for
-    * columnar landings). */
-  def parquetToTable(spark: SparkSession, landingDir: String,
-                     schema: StructType, table: LakehouseTable,
-                     checkpointDir: String): StreamingQuery =
-    runToTable(
-      spark.readStream.schema(schema).parquet(landingDir),
-      table, checkpointDir)
-
-  /** Stream parquet files into an ATOMIC snapshot table: each
-    * micro-batch commits as ONE manifest swap, so a concurrent reader
-    * always sees a complete batch boundary — never a batch applied to
-    * some partitions and not others (the gap the per-partition
-    * LakehouseTable sink leaves under concurrent reads). A batch
-    * replayed after a crash re-merges idempotently; its extra commit is
-    * content-identical and vacuumable. */
+  /** Stream parquet files from `landingDir` into `table` (the same loop
+    * for columnar landings). */
   def parquetToSnapshot(spark: SparkSession, landingDir: String,
                         schema: StructType, table: SnapshotTable,
                         checkpointDir: String,
@@ -67,10 +56,20 @@ object Ingest {
       : StreamingQuery = {
     val reader = spark.readStream.schema(schema)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val q = reader.parquet(landingDir).writeStream
+    upsertEachBatch(reader.parquet(landingDir), table, checkpointDir)
+  }
+
+  /** The AvailableNow loop: every micro-batch of `stream` is
+    * deduplicated by PK ([[dedupLatestFile]]) and upserted into `table`.
+    * Returns once the query has terminated. */
+  private def upsertEachBatch(stream: DataFrame, table: SnapshotTable,
+                              checkpointDir: String): StreamingQuery = {
+    val q = stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
+        // per-batch MERGE (T2): dedup within the batch first — a batch
+        // may contain multiple files carrying the same PK
         table.upsert(dedupLatestFile(batch, table.primaryKey))
       }
       .start()
@@ -94,20 +93,5 @@ object Ingest {
       .withColumn("__rk", row_number().over(w))
       .filter(col("__rk") === 1)
       .drop("__src_file", "__rk")
-  }
-
-  private def runToTable(stream: DataFrame, table: LakehouseTable,
-                         checkpointDir: String): StreamingQuery = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // per-batch MERGE (T2): dedup within the batch first — a batch
-        // may contain multiple files carrying the same PK
-        table.upsert(dedupLatestFile(batch, table.primaryKey))
-      }
-      .start()
-    q.awaitTermination()
-    q
   }
 }

@@ -14,7 +14,8 @@ import graft.sources.GraftCatalog
   * merges — batch sizes on both sides of the copy-on-write /
   * merge-on-read plan rule — interleaved with merge-on-read deletes,
   * compaction, vector purges and vacuum, on a partitioned and on a
-  * clustered table. After every step the head, every retained version
+  * clustered table. The key domain holds a NULL key ([[NullId]] in the
+  * model), which lands in the null partition or cluster value. After every step the head, every retained version
   * (API, `format("graft")` and SQL `VERSION AS OF`) and the step's
   * change feed (`changesDelta` and the batch `readChangeFeed`, each
   * net of cancelling pairs) must equal a pk→row model. Seeds are
@@ -44,9 +45,12 @@ class MergeModelSpec extends SparkSpec {
       clusterBy = Seq("k"), clusterFiles = 3),
     _.withColumn("k", (col("id") / 10).cast("int")))
 
+  /** The model's id of a row: [[NullId]] for the null key. */
+  private def idOf(r: Row): Int = if (r.isNullAt(0)) NullId else r.getInt(0)
+
   private def rowsOf(df: DataFrame): Map[Int, String] = {
     val rs = df.select("id", "v").collect()
-    val m = rs.map(r => r.getInt(0) -> r.getString(1)).toMap
+    val m = rs.map(r => idOf(r) -> r.getString(1)).toMap
     assert(m.size == rs.length, s"duplicate keys: ${rs.length} rows, ${m.size} keys")
     m
   }
@@ -54,7 +58,7 @@ class MergeModelSpec extends SparkSpec {
   /** Signed net of a change feed: +1 per after image, −1 per before. */
   private def net(df: DataFrame): Map[(Int, String), Int] =
     df.select(col("id"), col("v"), col(SnapshotTable.ImageCol)).collect()
-      .groupMapReduce(r => (r.getInt(0), r.getString(1)))(r =>
+      .groupMapReduce(r => (idOf(r), r.getString(1)))(r =>
         if (r.getString(2) == "after") 1 else -1)(_ + _)
       .filter(_._2 != 0)
 
@@ -68,9 +72,11 @@ class MergeModelSpec extends SparkSpec {
     val path = s"$warehouse/m${layout.name}$seed/t"
     val sqlName = s"graftmodel.m${layout.name}$seed.t"
     val ops = Gen.listOfN(Steps, opGen).pureApply(Gen.Parameters.default, Seed(seed))
-    var model = (0 until Universe by 2).map(i => i -> s"s0_$i").toMap
+    var model = (NullId +: (0 until Universe by 2)).map(i => i -> s"s0_$i").toMap
+    def keyed(df: DataFrame): DataFrame =
+      layout.placed(df.withColumn("id", when(col("id") =!= NullId, col("id"))))
     def frame(rows: Iterable[(Int, String)]): DataFrame =
-      layout.placed(rows.toSeq.toDF("id", "v"))
+      keyed(rows.toSeq.toDF("id", "v"))
     layout.open(path).create(frame(model))
     val history = scala.collection.mutable.Map(1L -> model)
     var (merged, rewritten) = (0, 0)
@@ -85,7 +91,7 @@ class MergeModelSpec extends SparkSpec {
           val upserts = ids.map(id => id -> s"s${step}_$id")
           if (deletes.isEmpty) t.upsert(frame(upserts))
           else t.upsertDelete(
-            layout.placed((upserts.map { case (id, v) => (id, v, false) } ++
+            keyed((upserts.map { case (id, v) => (id, v, false) } ++
               deletes.map(id => (id, "", true))).toDF("id", "v", "__del")),
             "__del")
           model = model ++ upserts -- deletes
@@ -94,7 +100,8 @@ class MergeModelSpec extends SparkSpec {
               _.deletedRowCount < e.deletedRowCount))) merged += 1
           if (!filesBefore.keySet.subsetOf(after.map(_.path).toSet)) rewritten += 1
         case DeleteMoR(ids) =>
-          t.deleteMoR(col("id").isin(ids: _*))
+          t.deleteMoR(col("id").isin(ids: _*) ||
+            (if (ids.contains(NullId)) col("id").isNull else lit(false)))
           model = model -- ids
         case Compact => t.compact()
         case Purge => t.purgeDeletes()
@@ -141,6 +148,8 @@ class MergeModelSpec extends SparkSpec {
 
 object MergeModelSpec {
   val Universe = 40
+  /** The model's stand-in for the NULL key. */
+  val NullId: Int = -1
   val Steps = 10
   val Seeds: Seq[Long] = Seq(11L, 29L)
 
@@ -153,12 +162,13 @@ object MergeModelSpec {
   case object Purge extends Op
   case object Vacuum extends Op
 
-  private val id = Gen.choose(0, Universe - 1)
+  private val domain: Seq[Int] = NullId +: (0 until Universe)
+  private val id = Gen.oneOf(domain)
 
   /** Distinct keys: small batches land on the merge-on-read side, large
     * ones (most of the key space) on the copy-on-write side. */
   private def keys(lo: Int, hi: Int): Gen[Seq[Int]] =
-    Gen.choose(lo, hi).flatMap(n => Gen.pick(n, 0 until Universe)).map(_.toSeq)
+    Gen.choose(lo, hi).flatMap(n => Gen.pick(n, domain)).map(_.toSeq)
 
   private val merge: Gen[Op] = for {
     ks <- Gen.frequency(3 -> keys(1, 3), 2 -> keys(Universe * 3 / 4, Universe))

@@ -77,6 +77,30 @@ class MergeOnReadSpec extends SparkSpec {
       6 -> "W6", 1 -> "v1", 3 -> "v3", 5 -> "v5", 7 -> "v7"))
   }
 
+  test("a null key replaces the null-keyed row on both sides of the rule; a replay is a no-op") {
+    def frame(rows: (Option[Int], String)*) =
+      rows.map { case (k, v) => (k, v, "p1") }.toDF("id", "val", "part")
+    def rows(t: SnapshotTable): Seq[(Option[Int], String)] =
+      t.read.collect().map(r => (Option(r.getAs[Integer]("id")).map(_.toInt),
+        r.getAs[String]("val"))).toSeq.sortBy(_._2)
+    val want = Seq((Some(1), "a"), (Some(2), "b"), (None, "n1"))
+    val batch = frame(None -> "n1", Some(2) -> "b")
+    val part = SnapshotTable(spark, tmp("nullpk_part"), "id", Some("part"))
+    val flat = SnapshotTable(spark, tmp("nullpk_flat"), "id")
+    for (t <- Seq(part, flat)) {
+      t.create(frame(Some(1) -> "a", None -> "n0"))
+      // as large as the two live rows: copy-on-write
+      t.upsert(batch)
+      assert(rows(t) == want, s"${t.path}: null-keyed row not replaced")
+      // on the partitioned table, smaller than the three live rows:
+      // merge-on-read; the unpartitioned table rewrites again
+      t.upsert(batch)
+      assert(rows(t) == want, s"${t.path}: a replay duplicated the null-keyed row")
+    }
+    assert(part.candidateFiles().map(_.deletedRowCount).sum == 2L)
+    assert(flat.candidateFiles().forall(!_.hasDeletes))
+  }
+
   test("upsertDelete merges on read: flagged keys are hidden, nothing rewritten") {
     val path = tmp("mor_updel")
     val t = seeded(path, parts = 2, perPart = 10)

@@ -41,7 +41,7 @@ class PipelineRetrySpec extends SparkSpec {
 
   test("retry repairs a partial upsert: crash mid-merge, second attempt heals") {
     val path = Files.createTempDirectory("graft_retry").toString + "/table"
-    val t = LakehouseTable(spark, path, "id", Some("part"))
+    val t = SnapshotTable(spark, path, "id", Some("part"))
     t.create(Seq((1, "a", "p1"), (2, "b", "p2")).toDF("id", "val", "part"))
     val batch = Seq((2, "B", "p2"), (3, "c", "p3")).toDF("id", "val", "part")
     var first = true

@@ -928,6 +928,35 @@ class SnapshotTableSpec extends SparkSpec {
     assert(out == Seq(1 -> "a", 2 -> "B"))
   }
 
+  test("a declared schema keeps a date-like string partition column a string") {
+    import org.apache.spark.sql.types._
+    val path = tmp("snapdeclared")
+    val t = SnapshotTable(spark, path, "id", Some("date"), Some(StructType(Seq(
+      StructField("id", IntegerType), StructField("date", StringType)))))
+    t.create(Seq((1, "2025-04-01"), (2, "2025-04-02")).toDF("id", "date"))
+    assert(t.read.schema("date").dataType == StringType)
+    t.upsert(Seq((3, "2025-04-03")).toDF("id", "date"))
+    // a bare handle reads the logged schema: no partition type inference
+    for (h <- Seq(t, SnapshotTable(spark, path, "id")))
+      assert(h.read.orderBy("id").select("date").as[String].collect().toSeq ==
+        Seq("2025-04-01", "2025-04-02", "2025-04-03"))
+  }
+
+  test("an all-new-key upsert rewrites no existing file; its replay adds no rows") {
+    val t = SnapshotTable(spark, tmp("snapallnew"), "id", Some("part"))
+    t.create(frame((1, "a", "p1"), (2, "b", "p1"), (3, "c", "p1"), (4, "d", "p2")))
+    val before = t.candidateFiles().toSet
+    // no key overlaps: p1 (three live rows, more than the batch) merges
+    // on read and hides nothing, p3 is a new partition
+    val batch = frame((5, "e", "p1"), (6, "f", "p3"))
+    t.upsert(batch)
+    assert(before.subsetOf(t.candidateFiles().toSet),
+      "a pre-existing file was rewritten or vectored")
+    t.upsert(batch)
+    assert(contents(t) == Seq(1 -> "a", 2 -> "b", 3 -> "c", 4 -> "d",
+      5 -> "e", 6 -> "f"))
+  }
+
   test("changesDelta: update emits before+after pair, insert after only, carried rows nothing") {
     import org.apache.spark.sql.functions.col
     val t = SnapshotTable(spark, tmp("snapdelta"), "id", Some("part"))
